@@ -12,9 +12,15 @@ Architecture (Spark-first, NOT a port):
                       verdict semantics exactly; runs driver-side for tests and
                       executor-side inside Arrow batches for dynamic JSON
                       (ref: JsonSchema/Validation.lean).
-- ``compiler``      — schema AST → native Spark Column predicate plan for
-                      statically-typed (shredded) document tables; the 100 TB
-                      scale path (whole-stage codegen, no Python in the loop).
+- ``compiler``      — the keyword-lowering core (resolver setup, $ref/$id
+                      scaffold, combinators, reference messages) and its
+                      typed subclass: schema AST → native Spark Column
+                      predicate plan for statically-typed (shredded)
+                      document tables; the 100 TB scale path (whole-stage
+                      codegen, no Python in the loop).
+- ``variant``       — the core's VARIANT subclass: the same keywords over
+                      ``try_parse_json`` values, for dynamic JSON string
+                      columns.
 - ``formats``       — draft-7 ``format`` as an opt-in assertion (annotation
                       by default; one portable regex per format, evaluated by
                       Python ``re`` and Java ``rlike`` via regex_dialect).

@@ -29,15 +29,26 @@ Anything not lowerable to Columns (exotic regex, dynamic JSON payloads,
 MapType-shaped objects) raises :class:`CompileFallback`; callers route those
 to the Arrow-batch interpreter path (operators/validation.py) — never a
 row-at-a-time Python UDF.
+
+One keyword-lowering core, two value representations. ``_KeywordLowering``
+owns everything that does not depend on how a value is read: resolver and
+registry setup, the ``_lower`` scaffold (boolean schemas, ``$ref`` /
+``$id``, the ``add`` / ``add_simple`` collectors and the valid/violations
+reduce), the reference-message builder ``_refb`` and the combinators
+(allOf / anyOf / oneOf / not / if). ``ColumnarCompiler`` below supplies the
+typed keyword methods, the typed value renderings (``lean_compress_typed``,
+``lean_num_typed``) and its descent rule (dtype + null_means per position,
+MAX_INLINE_DEPTH); variant.VariantCompiler supplies the VARIANT ones.
 """
 
 from __future__ import annotations
 
 import json
+import operator
 import re
 from dataclasses import dataclass
 from functools import reduce
-from typing import Any, Callable, Optional
+from typing import Any, Callable, NamedTuple, Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -107,6 +118,19 @@ def _guard(col: Column, pred: Column) -> Column:
     return F.when(col.isNull(), F.lit(True)).otherwise(F.coalesce(pred, F.lit(False)))
 
 
+def _let(expr: Column, fn: Callable[[Column], Column]) -> Column:
+    """Let-binding inside an expression: evaluate ``expr`` ONCE and pass it
+    to ``fn`` as a real lambda variable. Catalyst inlines every aliased
+    reference and has no common-subexpression reuse for interpreted
+    expressions (array_compact, for one, is rewritten to an interpreted
+    lambda filter), so an expression referenced inside a HOF lambda is
+    RE-EVALUATED per element — a sort referenced from a filter lambda
+    becomes O(n² log n) (measured: the first run-length char_entropy did
+    exactly that, 55 -> 165 s). A higher-order function evaluates its array
+    argument once and binds elements as real attributes."""
+    return F.get(F.transform(F.array(expr), fn), 0)
+
+
 def _concat_viols(parts: list[Column]) -> Column:
     parts = [p for p in parts if p is not None]
     if not parts:
@@ -122,6 +146,16 @@ def _cond_viol(col: Column, ok: Column, keyword: str, ptr: Column, msg: str) -> 
             .otherwise(F.array(_viol(keyword, ptr, msg)))
 
 
+def _ptr_token(name: str) -> str:
+    """RFC 6901 token of an object key (~ -> ~0, / -> ~1)."""
+    return name.replace("~", "~0").replace("/", "~1")
+
+
+def _ptr_key(key: Column) -> Column:
+    """RFC 6901 token escaping for a runtime key Column (~ -> ~0, / -> ~1)."""
+    return F.regexp_replace(F.regexp_replace(key, "~", "~0"), "/", "~1")
+
+
 def _viol_col(keyword: str, ptr: Column, msg: Column) -> Column:
     """Violation struct with a RUNTIME message Column (reference style
     embeds the offending value; evaluated lazily, only for failing rows)."""
@@ -132,10 +166,20 @@ def _viol_col(keyword: str, ptr: Column, msg: Column) -> Column:
     )
 
 
-def _cond_viol_col(col: Column, ok: Column, keyword: str, ptr: Column,
-                   msg: Column) -> Column:
-    return F.when(_guard(col, ok), F.array().cast(VIOLATION_SCHEMA)) \
-            .otherwise(F.array(_viol_col(keyword, ptr, msg)))
+def _branch_errs(c: Column, p: Column, lows: list[Lowered]) -> Column:
+    """Lean-array-of-arrays of per-branch violation MESSAGES — the
+    `Errors:` slot of the reference anyOf / oneOf(0) strings (messages are
+    reference-style recursively, so the embedded strings byte-match the
+    interpreter's _branch_errors)."""
+    parts = [F.concat(
+        F.lit("#["),
+        F.array_join(F.transform(lo.violations(c, p),
+                                 lambda x: x.getField("message")),
+                     ", "),
+        F.lit("]")) for lo in lows]
+    return F.concat(F.lit("#["),
+                    F.concat_ws(", ", *parts) if parts else F.lit(""),
+                    F.lit("]"))
 
 
 # ---------------------------------------------------------------------------
@@ -268,20 +312,119 @@ def _literal_pattern_predicate(jpat: str):
     return None
 
 
-class ColumnarCompiler:
-    """Compile a schema once against a DataFrame column's dtype."""
+# ---------------------------------------------------------------------------
+# Keyword pieces shared by the typed and VARIANT lowerings
+# ---------------------------------------------------------------------------
 
-    def __init__(
-        self,
-        schema_json: Any,
-        uri: str = DEFAULT_URI,
-        registry: Optional[dict[str, Any]] = None,
-        message_style: str = "structured",
-        assert_formats: bool = False,
-    ) -> None:
+def _has_object_keywords(s: SchemaObject) -> bool:
+    return any([
+        s.required, s.properties, s.pattern_properties,
+        s.property_names is not None,
+        s.additional_properties is not None, s.max_properties is not None,
+        s.min_properties is not None, s.dependencies,
+    ])
+
+
+def _has_array_keywords(s: SchemaObject) -> bool:
+    return any([
+        s.items is not None, s.additional_items is not None,
+        s.max_items is not None, s.min_items is not None,
+        s.unique_items, s.contains is not None,
+    ])
+
+
+def _numeric_bounds(s: SchemaObject) -> list[tuple[str, Any, Callable, str]]:
+    """``(keyword, limit, ok(value, limit), structured message)`` for each
+    numeric bound the schema sets (multipleOf is lowered separately)."""
+    bounds = [("maximum", s.maximum, operator.le, ">"),
+              ("exclusiveMaximum", s.exclusive_maximum, operator.lt, ">="),
+              ("minimum", s.minimum, operator.ge, "<"),
+              ("exclusiveMinimum", s.exclusive_minimum, operator.gt, "<=")]
+    return [(kw, m, ok, f"{op} {m}") for kw, m, ok, op in bounds
+            if m is not None]
+
+
+def _matched_entries(obj: Column, jpat: str) -> Column:
+    """Entries of a map<string,_> whose key the transpiled regex matches."""
+    return F.filter(
+        F.map_entries(obj),
+        lambda kv: F.regexp_like(kv.getField("key"), F.lit(jpat)))
+
+
+def _extra_entries(obj: Column, declared: list[str],
+                   pattern_res: list[str]) -> Column:
+    """Entries of a map<string,_> that additionalProperties governs: keys
+    neither declared in properties nor matched by a patternProperties
+    regex."""
+    def is_extra(kv: Column) -> Column:
+        cond = ~kv.getField("key").isin(*declared) if declared else F.lit(True)
+        for p in pattern_res:
+            cond = cond & ~F.regexp_like(kv.getField("key"), F.lit(p))
+        return cond
+    return F.filter(F.map_entries(obj), is_extra)
+
+
+def _entries_viols(entries_fn, low: Lowered, skip):
+    """Violations of ``low`` over each map entry's value, at a per-key
+    pointer (sub-violations keep their own keywords, matching the
+    interpreter's granularity); none where ``skip(c)``."""
+    def viol_fn(c: Column, p: Column) -> Column:
+        return F.when(skip(c), F.array().cast(VIOLATION_SCHEMA)) \
+                .otherwise(F.flatten(F.transform(
+                    entries_fn(c),
+                    lambda kv: low.violations(
+                        kv.getField("value"),
+                        F.concat(p, F.lit("/"), _ptr_key(kv.getField("key")))))))
+    return viol_fn
+
+
+def _false_viols(entries: Column, p: Column) -> Column:
+    """One 'false' violation per map entry, at its key's pointer (the
+    reference validates each extra value against the `false` schema)."""
+    return F.transform(entries, lambda kv: F.struct(
+        F.lit("false").alias("keyword"),
+        F.concat(p, F.lit("/"), _ptr_key(kv.getField("key")))
+         .alias("json_pointer"),
+        F.lit("Boolean schema 'false' rejects all values").alias("message")))
+
+
+def _java_patterns(s: SchemaObject) -> list[str]:
+    """patternProperties regexes transpiled for ``regexp_like``."""
+    from .regex_dialect import to_java_regex
+    out = []
+    for pat, _ in (s.pattern_properties or []):
+        jpat = to_java_regex(pat)
+        if jpat is None:
+            raise CompileFallback(f"patternProperties regex {pat!r}")
+        out.append(jpat)
+    return out
+
+
+class _KeywordLowering:
+    """The keyword-lowering core shared by ColumnarCompiler (typed columns)
+    and variant.VariantCompiler (VARIANT values); the module docstring
+    lists what it owns.
+
+    ``_lower(schema, base_uri, at)`` walks one schema node at position
+    ``at``, whose shape is the subclass's descent state. A subclass
+    supplies:
+
+    - the keyword methods ``_lower_type``, ``_lower_const_enum``,
+      ``_lower_string``, ``_lower_numeric``, ``_lower_object`` and
+      ``_lower_array``, each called as ``(s, base_uri, at, add, add_simple)``;
+    - the value renderings of reference-style messages: ``_render_value``
+      (Json.compress), ``_render_num`` (JsonNumber) and ``_string_value``
+      (the string a length is counted on);
+    - its descent rule: ``_enter(at)`` runs on every node (depth or budget
+      guard), ``_through_ref`` lowers a resolved ``$ref`` target and
+      ``_same_value(at)`` gives a combinator branch's position."""
+
+    def __init__(self, schema_json: Any, uri: str,
+                 registry: Optional[dict[str, Any]], message_style: str,
+                 assert_formats: bool) -> None:
         #: "structured" (concise human messages) or "reference" (byte-parity
         #: with the Lean reportError strings — the offending value is
-        #: compressed into the message at runtime, lean_compress_typed)
+        #: compressed into the message at runtime, _render_value)
         self.message_style = message_style
         #: opt-in draft-7 format assertion (annotation by default; formats.py)
         self.assert_formats = assert_formats
@@ -296,38 +439,17 @@ class ColumnarCompiler:
                 self.resolver.add_schema(reg_schema, reg_uri)
         cycle = find_ref_cycle(self.resolver)
         if cycle is not None:
-            raise SchemaCycleError(cycle)
+            self._reject_cycle(cycle)
 
-    def lower(self, dtype: DataType, null_means: str = "absent") -> Lowered:
-        """null_means governs what a NULL value at THIS position denotes:
-        'absent' (a missing object key — every keyword passes; the struct-
-        shredding mapping) or 'null' (a JSON null — array elements, where
-        type/const/enum must see an actual null value)."""
-        return self._lower(self.schema, dtype, self.root_uri, 0, null_means)
+    def _reject_cycle(self, cycle) -> None:
+        raise SchemaCycleError(cycle)
 
-    def lower_node(self, schema: Any, dtype: DataType,
-                   base_uri: Optional[str] = None,
-                   null_means: str = "absent") -> Lowered:
-        """Lower an arbitrary schema NODE (raw JSON or parsed Schema) with
-        THIS compiler's full resolver context: root-relative $refs (e.g.
-        '#/properties/spans/items') resolve against the registered root
-        schema, exactly as on the interpreter path. Used by the explode /
-        violation-row strategies to compile items/doc subplans without a
-        lossy synthetic root (ADVICE r1)."""
-        node = schema if isinstance(schema, (bool, SchemaObject)) \
-            else parse_schema(schema)
-        uri = self.root_uri if base_uri is None else base_uri
-        return self._lower(node, dtype, uri, 0, null_means)
+    def _compressed(self, c: Column, at) -> Column:
+        # NULL only reaches a firing violation at positions where it IS a
+        # JSON null (typed null_means='null'; variant never)
+        return F.coalesce(self._render_value(c, at), F.lit("null"))
 
-    def root_base_uri(self) -> str:
-        """root_uri rebased by the root schema's $id, i.e. the base URI in
-        effect for nodes inside the root (matches _lower's rebase)."""
-        s = self.schema
-        if isinstance(s, SchemaObject) and s.id is not None:
-            return resolve_uri(self.root_uri, s.id)
-        return self.root_uri
-
-    def _refb(self, keyword: str, dtype: DataType, count_fn=None,
+    def _refb(self, keyword: str, at, count_fn=None,
               prefix_key: Optional[str] = None, **ctx):
         """Reference-style message builder (c -> Column) for add_simple's
         `ref` parameter, or None outside reference mode. The static prefix
@@ -338,28 +460,50 @@ class ColumnarCompiler:
         from .lean_messages import REF_SHAPES, ref_prefix
         pre = ref_prefix(prefix_key or keyword, **ctx)
         shape = REF_SHAPES[keyword]
-        def compress(c: Column) -> Column:
-            # NULL only reaches a firing violation at null_means='null'
-            # positions, where it IS a JSON null
-            return F.coalesce(lean_compress_typed(c, dtype), F.lit("null"))
         if shape == "value":
-            return lambda c: F.concat(F.lit(pre), compress(c))
+            return lambda c: F.concat(F.lit(pre), self._compressed(c, at))
         if shape == "strlen":
-            return lambda c: F.concat(F.lit(pre), F.length(c).cast("string"))
+            return lambda c: F.concat(
+                F.lit(pre), F.length(self._string_value(c)).cast("string"))
         if shape == "num":
             return lambda c: F.concat(F.lit(pre + '"'),
-                                      lean_num_typed(c, dtype), F.lit('"'))
+                                      self._render_num(c, at), F.lit('"'))
         if shape == "count_value":
             return lambda c: F.concat(F.lit(pre), count_fn(c).cast("string"),
-                                      F.lit(" "), compress(c))
+                                      F.lit(" "), self._compressed(c, at))
         return None  # pragma: no cover
+
+    def _dependencies_ref(self, key: str, reqs: list[str], at, missing):
+        """Reference-style message for a property dependency, or None:
+        like the interpreter, it names the first MISSING required property
+        (runtime; ``missing(c, name)`` is the value's absence test)."""
+        if self.message_style != "reference" or not reqs:
+            return None
+
+        def dref(c: Column, k=key, r=tuple(reqs)) -> Column:
+            from .lean_messages import ref_prefix
+            first_missing = F.coalesce(
+                *[F.when(missing(c, x), F.lit(x)) for x in r], F.lit(r[0]))
+            pre = ref_prefix("dependencies", key=k, req="\x00")
+            head, tail = pre.split("\x00")
+            return F.concat(F.lit(head), first_missing, F.lit(tail),
+                            self._compressed(c, at))
+        return dref
+
+    def _contains_ref(self, at, n_items):
+        """Reference-style ``contains`` message, or None: like the
+        interpreter, the empty-array message iff ``n_items(c)`` is 0."""
+        if self.message_style != "reference":
+            return None
+        ref_empty = self._refb("contains", at, prefix_key="contains_empty")
+        ref_nomatch = self._refb("contains", at)
+        return lambda c: F.when(n_items(c) == 0, ref_empty(c)) \
+                          .otherwise(ref_nomatch(c))
 
     # ------------------------------------------------------------------
 
-    def _lower(self, schema: Schema, dtype: DataType, base_uri: str, depth: int,
-               null_means: str = "absent") -> Lowered:
-        if depth > MAX_INLINE_DEPTH:
-            raise CompileFallback("inline depth exceeded")
+    def _lower(self, schema: Schema, base_uri: str, at) -> Lowered:
+        self._enter(at)
         if isinstance(schema, bool):
             if schema:
                 return _LOWERED_TRUE
@@ -378,7 +522,7 @@ class ColumnarCompiler:
             got = self.resolver.get_schema_and_uri(root, subpath)
             if got is None:
                 # unresolvable ref: every instance fails (reference reports error)
-                rref = self._refb("$ref", dtype, base=root, path=subpath)
+                rref = self._refb("$ref", at, base=root, path=subpath)
                 return Lowered(
                     valid=lambda c: F.lit(False),
                     violations=lambda c, p: F.array(
@@ -386,7 +530,8 @@ class ColumnarCompiler:
                         else _viol("$ref", p, f"Could not find {target!r}")),
                 )
             sub, new_uri = got
-            return self._lower(sub, dtype, new_uri, depth + 1, null_means)
+            return self._through_ref(sub, new_uri, at,
+                                     f"{root}#{'/'.join(subpath)}")
 
         if s.id is not None:
             base_uri = resolve_uri(base_uri, s.id)
@@ -407,18 +552,18 @@ class ColumnarCompiler:
             if self.message_style == "reference" and ref is not None:
                 add(lambda c, ok=ok_fn: _guard(c, ok(c)),
                     lambda c, p, ok=ok_fn, kw=keyword, r=ref:
-                    _cond_viol_col(c, ok(c), kw, p, r(c)))
+                    F.when(_guard(c, ok(c)), F.array().cast(VIOLATION_SCHEMA))
+                     .otherwise(F.array(_viol_col(kw, p, r(c)))))
             else:
                 add(lambda c, ok=ok_fn: _guard(c, ok(c)),
-                    lambda c, p, ok=ok_fn, kw=keyword, m=msg: _cond_viol(c, ok(c), kw, p, m))
+                    lambda c, p, ok=ok_fn, kw=keyword, m=msg:
+                    _cond_viol(c, ok(c), kw, p, m))
 
-        self._lower_type(s, dtype, add, add_simple, null_means)
-        self._lower_const_enum(s, dtype, add, add_simple, null_means)
-        self._lower_string(s, dtype, add_simple)
-        self._lower_numeric(s, dtype, add_simple)
-        self._lower_object(s, dtype, base_uri, depth, add, add_simple)
-        self._lower_array(s, dtype, base_uri, depth, add, add_simple)
-        self._lower_combinators(s, dtype, base_uri, depth, add, null_means)
+        for lower_keywords in (self._lower_type, self._lower_const_enum,
+                               self._lower_string, self._lower_numeric,
+                               self._lower_object, self._lower_array,
+                               self._lower_combinators):
+            lower_keywords(s, base_uri, at, add, add_simple)
 
         if not valid_parts:
             return _LOWERED_TRUE
@@ -431,34 +576,197 @@ class ColumnarCompiler:
 
         return Lowered(valid=valid, violations=violations)
 
+    # ---- combinators ----------------------------------------------------------
+
+    def _lower_combinators(self, s: SchemaObject, base_uri: str, at,
+                           add, add_simple) -> None:
+        def branch(sub: Schema) -> Lowered:
+            return self._lower(sub, base_uri, self._same_value(at))
+
+        if s.all_of is not None:
+            for sub in s.all_of:
+                low = branch(sub)
+                add(low.valid, low.violations)
+        refmode = self.message_style == "reference"
+        if s.any_of is not None:
+            lows = [branch(sub) for sub in s.any_of]
+
+            def v_fn(c: Column, ls=lows) -> Column:
+                if not ls:
+                    return F.lit(False)  # empty anyOf: no branch can match
+                return reduce(lambda a, b: a | b,
+                              (F.coalesce(lo.valid(c), F.lit(False)) for lo in ls))
+
+            def any_viol(c: Column, p: Column, v=v_fn, ls=lows) -> Column:
+                if refmode:
+                    msg = F.concat(
+                        F.lit("anyOf: no schemas matched. Errors: "),
+                        _branch_errs(c, p, ls), F.lit(" "),
+                        self._compressed(c, at))
+                    bad = F.array(_viol_col("anyOf", p, msg))
+                else:
+                    bad = F.array(_viol("anyOf", p, "no branch matched"))
+                return F.when(v(c), F.array().cast(VIOLATION_SCHEMA)) \
+                        .otherwise(bad)
+            add(v_fn, any_viol)
+        if s.one_of is not None:
+            lows = [branch(sub) for sub in s.one_of]
+
+            def v1_fn(c: Column, ls=lows) -> Column:
+                if not ls:
+                    return F.lit(False)  # empty oneOf: zero matches != 1
+                return reduce(lambda a, b: a + b,
+                              (F.coalesce(lo.valid(c), F.lit(False)).cast("int")
+                               for lo in ls)) == 1
+
+            def one_viol(c: Column, p: Column, v=v1_fn, ls=lows) -> Column:
+                if refmode:
+                    n = reduce(lambda a, b: a + b,
+                               (F.coalesce(lo.valid(c), F.lit(False))
+                                 .cast("int") for lo in ls)) \
+                        if ls else F.lit(0)
+                    compressed = self._compressed(c, at)
+                    msg = F.when(
+                        n == 0,
+                        F.concat(F.lit("oneOf: expected exactly 1 match but "
+                                       "got 0. Errors: "),
+                                 _branch_errs(c, p, ls), F.lit(" "),
+                                 compressed)) \
+                        .otherwise(F.concat(
+                            F.lit("oneOf: expected exactly 1 match but got "),
+                            n.cast("string"), F.lit(" "), compressed))
+                    bad = F.array(_viol_col("oneOf", p, msg))
+                else:
+                    bad = F.array(_viol("oneOf", p, "matched != 1 branches"))
+                return F.when(v(c), F.array().cast(VIOLATION_SCHEMA)) \
+                        .otherwise(bad)
+            add(v1_fn, one_viol)
+        if s.not_ is not None:
+            low = branch(s.not_)
+
+            def vn_fn(c: Column, lo=low) -> Column:
+                return ~F.coalesce(lo.valid(c), F.lit(False))
+            nref = self._refb("not", at)
+            add(vn_fn, lambda c, p, v=vn_fn, r=nref: F.when(
+                    v(c), F.array().cast(VIOLATION_SCHEMA))
+                .otherwise(F.array(
+                    _viol_col("not", p, r(c)) if r is not None
+                    else _viol("not", p, "schema matched but must not"))))
+        if s.if_ is not None:
+            if_low = branch(s.if_)
+            then_low = branch(s.then_) if s.then_ is not None else _LOWERED_TRUE
+            else_low = branch(s.else_) if s.else_ is not None else _LOWERED_TRUE
+            add(
+                lambda c: F.when(F.coalesce(if_low.valid(c), F.lit(False)),
+                                 then_low.valid(c)).otherwise(else_low.valid(c)),
+                lambda c, p: F.when(F.coalesce(if_low.valid(c), F.lit(False)),
+                                    then_low.violations(c, p))
+                .otherwise(else_low.violations(c, p)),
+            )
+
+
+class _TypedAt(NamedTuple):
+    """ColumnarCompiler's descent state: the value's Spark dtype, the inline
+    depth (every subschema and $ref step counts, MAX_INLINE_DEPTH bounds
+    evil-cycle inlining) and what a NULL at this position means."""
+
+    dtype: DataType
+    depth: int
+    null_means: str = "absent"
+
+    def child(self, dtype: DataType, null_means: str = "absent") -> "_TypedAt":
+        """Position of a nested value (object field, array element)."""
+        return _TypedAt(dtype, self.depth + 1, null_means)
+
+    def deeper(self) -> "_TypedAt":
+        """The same value one subschema deeper ($ref target, combinator)."""
+        return self._replace(depth=self.depth + 1)
+
+
+class ColumnarCompiler(_KeywordLowering):
+    """Compile a schema once against a DataFrame column's dtype."""
+
+    def __init__(
+        self,
+        schema_json: Any,
+        uri: str = DEFAULT_URI,
+        registry: Optional[dict[str, Any]] = None,
+        message_style: str = "structured",
+        assert_formats: bool = False,
+    ) -> None:
+        super().__init__(schema_json, uri, registry, message_style,
+                         assert_formats)
+
+    def lower(self, dtype: DataType, null_means: str = "absent") -> Lowered:
+        """null_means governs what a NULL value at THIS position denotes:
+        'absent' (a missing object key — every keyword passes; the struct-
+        shredding mapping) or 'null' (a JSON null — array elements, where
+        type/const/enum must see an actual null value)."""
+        return self._lower(self.schema, self.root_uri,
+                           _TypedAt(dtype, 0, null_means))
+
+    def lower_node(self, schema: Any, dtype: DataType,
+                   base_uri: Optional[str] = None,
+                   null_means: str = "absent") -> Lowered:
+        """Lower an arbitrary schema NODE (raw JSON or parsed Schema) with
+        THIS compiler's full resolver context: root-relative $refs (e.g.
+        '#/properties/spans/items') resolve against the registered root
+        schema, exactly as on the interpreter path. Used by the explode /
+        violation-row strategies to compile items/doc subplans without a
+        lossy synthetic root (ADVICE r1)."""
+        node = schema if isinstance(schema, (bool, SchemaObject)) \
+            else parse_schema(schema)
+        uri = self.root_uri if base_uri is None else base_uri
+        return self._lower(node, uri, _TypedAt(dtype, 0, null_means))
+
+    def root_base_uri(self) -> str:
+        """root_uri rebased by the root schema's $id, i.e. the base URI in
+        effect for nodes inside the root (matches _lower's rebase)."""
+        s = self.schema
+        if isinstance(s, SchemaObject) and s.id is not None:
+            return resolve_uri(self.root_uri, s.id)
+        return self.root_uri
+
+    # ---- descent rule and value renderings ----------------------------------
+
+    def _enter(self, at: _TypedAt) -> None:
+        if at.depth > MAX_INLINE_DEPTH:
+            raise CompileFallback("inline depth exceeded")
+
+    def _through_ref(self, sub: Schema, uri: str, at: _TypedAt,
+                     key: str) -> Lowered:
+        return self._lower(sub, uri, at.deeper())
+
+    def _same_value(self, at: _TypedAt) -> _TypedAt:
+        return at.deeper()
+
+    def _render_value(self, c: Column, at: _TypedAt) -> Column:
+        return lean_compress_typed(c, at.dtype)
+
+    def _render_num(self, c: Column, at: _TypedAt) -> Column:
+        return lean_num_typed(c, at.dtype)
+
+    def _string_value(self, c: Column) -> Column:
+        return c
+
     # ---- type -----------------------------------------------------------
 
-    def _lower_type(self, s: SchemaObject, dtype: DataType, add,
-                    add_simple, null_means: str = "absent") -> None:
+    def _lower_type(self, s: SchemaObject, base_uri: str, at: _TypedAt,
+                    add, add_simple) -> None:
         if "any" in s.types:
             return
-        json_null = null_means == "null"
+        dtype = at.dtype
+        json_null = at.null_means == "null"
         null_ok = "null" in s.types
         static_names = _static_type_names(dtype)
         msg = f"expected one of {s.types}"
 
-        ref = self._refb("type", dtype, types=[str(t) for t in s.types])
+        ref = self._refb("type", at, types=[str(t) for t in s.types])
 
         def add_typed(nonnull_ok, msg=msg):
-            """Combine the non-null predicate with the position's null rule."""
-            if json_null:
-                # a NULL here is JSON null: passes iff "null" is in types
-                def ok_all(c: Column, ok=nonnull_ok) -> Column:
-                    return F.when(c.isNull(), F.lit(null_ok)) \
-                            .otherwise(F.coalesce(ok(c), F.lit(False)))
-                add(ok_all,
-                    lambda c, p: F.when(ok_all(c),
-                                        F.array().cast(VIOLATION_SCHEMA))
-                    .otherwise(F.array(
-                        _viol_col("type", p, ref(c)) if ref is not None
-                        else _viol("type", p, msg))))
-            else:
-                add_simple(nonnull_ok, "type", msg, ref=ref)
+            # a JSON null passes iff "null" is in types
+            self._add_null_aware(at, add, add_simple, nonnull_ok, null_ok,
+                                 "type", msg, ref)
 
         if any(t in static_names for t in s.types):
             if json_null and not null_ok:
@@ -480,29 +788,36 @@ class ColumnarCompiler:
 
     # ---- const / enum -----------------------------------------------------
 
-    def _lower_const_enum(self, s: SchemaObject, dtype: DataType, add,
-                          add_simple, null_means: str = "absent") -> None:
-        json_null = null_means == "null"
+    def _add_null_aware(self, at: _TypedAt, add, add_simple, nonnull_ok,
+                        null_ok: bool, keyword: str, msg: str, ref) -> None:
+        """A type / const / enum check under the position's null rule: at a
+        null_means='null' position a NULL is a JSON null and passes iff
+        ``null_ok``; elsewhere it is an absent value and passes."""
+        if at.null_means != "null":
+            add_simple(nonnull_ok, keyword, msg, ref=ref)
+            return
+
+        def ok_all(c: Column) -> Column:
+            return F.when(c.isNull(), F.lit(null_ok)) \
+                    .otherwise(F.coalesce(nonnull_ok(c), F.lit(False)))
+        add(ok_all,
+            lambda c, p: F.when(ok_all(c), F.array().cast(VIOLATION_SCHEMA))
+            .otherwise(F.array(
+                _viol_col(keyword, p, ref(c)) if ref is not None
+                else _viol(keyword, p, msg))))
+
+    def _lower_const_enum(self, s: SchemaObject, base_uri: str, at: _TypedAt,
+                          add, add_simple) -> None:
+        dtype = at.dtype
 
         def add_eq(nonnull_ok, null_matches: bool, keyword: str, msg: str,
                    ref=None):
-            if json_null:
-                def ok_all(c: Column, ok=nonnull_ok, nm=null_matches) -> Column:
-                    return F.when(c.isNull(), F.lit(nm)) \
-                            .otherwise(F.coalesce(ok(c), F.lit(False)))
-                add(ok_all,
-                    lambda c, p, kw=keyword, m=msg, r=ref:
-                    F.when(ok_all(c), F.array().cast(VIOLATION_SCHEMA))
-                    .otherwise(F.array(
-                        _viol_col(kw, p, r(c))
-                        if self.message_style == "reference" and r is not None
-                        else _viol(kw, p, m))))
-            else:
-                add_simple(nonnull_ok, keyword, msg, ref=ref)
+            self._add_null_aware(at, add, add_simple, nonnull_ok,
+                                 null_matches, keyword, msg, ref)
 
         if s.const is not ABSENT:
             msg = f"expected {_cjson(s.const)}"
-            cref = self._refb("const", dtype, const=s.const)
+            cref = self._refb("const", at, const=s.const)
             if s.const is None:
                 add_eq(lambda c: F.lit(False), True, "const", msg, ref=cref)
             else:
@@ -513,7 +828,7 @@ class ColumnarCompiler:
                     add_eq(pred, False, "const", msg, ref=cref)
         if s.enum is not None:
             null_in_enum = any(v is None for v in s.enum)
-            eref = self._refb("enum", dtype, enum=list(s.enum))
+            eref = self._refb("enum", at, enum=list(s.enum))
             preds = [_eq_pred(v, dtype) for v in s.enum if v is not None]
             preds = [p for p in preds if p is not None]
             if not preds:
@@ -527,19 +842,20 @@ class ColumnarCompiler:
 
     # ---- strings -----------------------------------------------------------
 
-    def _lower_string(self, s: SchemaObject, dtype: DataType, add_simple) -> None:
-        if not isinstance(dtype, StringType):
+    def _lower_string(self, s: SchemaObject, base_uri: str, at: _TypedAt,
+                      add, add_simple) -> None:
+        if not isinstance(at.dtype, StringType):
             return  # string keywords pass on non-strings
         if s.max_length is not None:
             n = s.max_length
             add_simple(lambda c, n=n: F.length(c) <= n, "maxLength",
                        f"length > {n}",
-                       ref=self._refb("maxLength", dtype, limit=n))
+                       ref=self._refb("maxLength", at, limit=n))
         if s.min_length is not None:
             n = s.min_length
             add_simple(lambda c, n=n: F.length(c) >= n, "minLength",
                        f"length < {n}",
-                       ref=self._refb("minLength", dtype, limit=n))
+                       ref=self._refb("minLength", at, limit=n))
         if s.pattern is not None:
             from .regex_dialect import to_java_regex
             pat = s.pattern
@@ -554,11 +870,11 @@ class ColumnarCompiler:
             lit_fn = _literal_pattern_predicate(jpat)
             if lit_fn is not None:
                 add_simple(lit_fn, "pattern", f"no match for {pat!r}",
-                           ref=self._refb("pattern", dtype, pattern=pat))
+                           ref=self._refb("pattern", at, pattern=pat))
             else:
                 add_simple(lambda c, p=jpat: F.regexp_like(c, F.lit(p)),
                            "pattern", f"no match for {pat!r}",
-                           ref=self._refb("pattern", dtype, pattern=pat))
+                           ref=self._refb("pattern", at, pattern=pat))
         if self.assert_formats and s.format is not None:
             from .formats import format_predicate
             fmt = s.format
@@ -571,32 +887,20 @@ class ColumnarCompiler:
 
     # ---- numerics -----------------------------------------------------------
 
-    def _lower_numeric(self, s: SchemaObject, dtype: DataType, add_simple) -> None:
-        if not isinstance(dtype, _INTEGRAL + _FRACTIONAL):
+    def _lower_numeric(self, s: SchemaObject, base_uri: str, at: _TypedAt,
+                       add, add_simple) -> None:
+        if not isinstance(at.dtype, _INTEGRAL + _FRACTIONAL):
             return
         def d(c: Column) -> Column:
             return c.cast("double")
-        if s.maximum is not None:
-            m = s.maximum
-            add_simple(lambda c, m=m: d(c) <= m, "maximum", f"> {m}",
-                       ref=self._refb("maximum", dtype, limit=m))
-        if s.exclusive_maximum is not None:
-            m = s.exclusive_maximum
-            add_simple(lambda c, m=m: d(c) < m, "exclusiveMaximum", f">= {m}",
-                       ref=self._refb("exclusiveMaximum", dtype, limit=m))
-        if s.minimum is not None:
-            m = s.minimum
-            add_simple(lambda c, m=m: d(c) >= m, "minimum", f"< {m}",
-                       ref=self._refb("minimum", dtype, limit=m))
-        if s.exclusive_minimum is not None:
-            m = s.exclusive_minimum
-            add_simple(lambda c, m=m: d(c) > m, "exclusiveMinimum", f"<= {m}",
-                       ref=self._refb("exclusiveMinimum", dtype, limit=m))
+        for keyword, m, ok, msg in _numeric_bounds(s):
+            add_simple(lambda c, m=m, ok=ok: ok(d(c), m), keyword, msg,
+                       ref=self._refb(keyword, at, limit=m))
         if s.multiple_of is not None:
             m = s.multiple_of
             if m == 0:
                 add_simple(lambda c: F.lit(False), "multipleOf", "multipleOf 0",
-                           ref=self._refb("multipleOf", dtype, limit=m))
+                           ref=self._refb("multipleOf", at, limit=m))
             else:
                 # reference semantics: float division, zero fraction, finite
                 # (x % 1.0 == 0.0 — NaN/Inf quotients give NaN != 0, and no
@@ -604,22 +908,17 @@ class ColumnarCompiler:
                 add_simple(
                     lambda c, m=m: (d(c) / m % 1.0) == 0.0,
                     "multipleOf", f"not a multiple of {m}",
-                    ref=self._refb("multipleOf", dtype, limit=m))
+                    ref=self._refb("multipleOf", at, limit=m))
 
     # ---- objects (StructType shredding) -----------------------------------
 
-    def _lower_object(self, s: SchemaObject, dtype: DataType, base_uri: str,
-                      depth: int, add, add_simple) -> None:
-        has_obj_kw = any([
-            s.required, s.properties, s.pattern_properties,
-            s.property_names is not None,
-            s.additional_properties is not None, s.max_properties is not None,
-            s.min_properties is not None, s.dependencies,
-        ])
-        if not has_obj_kw:
+    def _lower_object(self, s: SchemaObject, base_uri: str, at: _TypedAt,
+                      add, add_simple) -> None:
+        if not _has_object_keywords(s):
             return
+        dtype = at.dtype
         if isinstance(dtype, MapType):
-            self._lower_map_object(s, dtype, base_uri, depth, add, add_simple)
+            self._lower_map_object(s, base_uri, at, add, add_simple)
             return
         if not isinstance(dtype, StructType):
             return  # object keywords pass on non-objects
@@ -630,12 +929,41 @@ class ColumnarCompiler:
         def present(c: Column, k: str) -> Column:
             return c.getField(k).isNotNull() if k in field_type else F.lit(False)
 
+        def add_field(k: str, sub: Schema) -> None:
+            """Lower ``sub`` over field ``k``; an absent field passes."""
+            low = self._lower(sub, base_uri, at.child(field_type[k]))
+            tok = _ptr_token(k)
+
+            def v_fn(c: Column) -> Column:
+                return F.when(c.isNull() | c.getField(k).isNull(), F.lit(True)) \
+                        .otherwise(low.valid(c.getField(k)))
+
+            def viol_fn(c: Column, p: Column) -> Column:
+                return F.when(c.isNull() | c.getField(k).isNull(),
+                              F.array().cast(VIOLATION_SCHEMA)) \
+                        .otherwise(low.violations(c.getField(k),
+                                                  F.concat(p, F.lit("/" + tok))))
+            add(v_fn, viol_fn)
+
+        def add_none_present(keys: list[str], viol_for) -> None:
+            """Fails when any of ``keys`` is present: one violation
+            ``viol_for(c, p, k)`` per present key (interpreter granularity)."""
+            def viols(c: Column, p: Column) -> Column:
+                return F.when(c.isNull(), F.array().cast(VIOLATION_SCHEMA)) \
+                        .otherwise(_concat_viols([
+                            F.when(present(c, k), F.array(viol_for(c, p, k)))
+                             .otherwise(F.array().cast(VIOLATION_SCHEMA))
+                            for k in keys]))
+            add(lambda c: _guard(c, ~reduce(
+                    lambda x, y: x | y, (present(c, k) for k in keys))),
+                viols)
+
         if s.required:
             req = list(s.required)
             add_simple(lambda c, r=req: reduce(lambda a, b: a & b,
                                                (present(c, k) for k in r)),
                        "required", f"missing one of {req}",
-                       ref=self._refb("required", dtype, required=req))
+                       ref=self._refb("required", at, required=req))
 
         # key count on shredded structs = count of non-null fields
         if s.max_properties is not None or s.min_properties is not None:
@@ -647,32 +975,19 @@ class ColumnarCompiler:
                 m = s.max_properties
                 add_simple(lambda c, m=m: nprops(c) <= m, "maxProperties",
                            f"> {m}",
-                           ref=self._refb("maxProperties", dtype,
+                           ref=self._refb("maxProperties", at,
                                           count_fn=nprops, limit=m))
             if s.min_properties is not None:
                 m = s.min_properties
                 add_simple(lambda c, m=m: nprops(c) >= m, "minProperties",
                            f"< {m}",
-                           ref=self._refb("minProperties", dtype,
+                           ref=self._refb("minProperties", at,
                                           count_fn=nprops, limit=m))
 
         if s.properties:
             for name, sub in s.properties:
-                if name not in field_type:
-                    continue  # key can never be present -> check never fires
-                low = self._lower(sub, field_type[name], base_uri, depth + 1)
-                tok = name.replace("~", "~0").replace("/", "~1")
-
-                def v_fn(c: Column, lo=low, k=name) -> Column:
-                    return F.when(c.isNull() | c.getField(k).isNull(), F.lit(True)) \
-                            .otherwise(lo.valid(c.getField(k)))
-
-                def viol_fn(c: Column, p: Column, lo=low, k=name, t=tok) -> Column:
-                    return F.when(c.isNull() | c.getField(k).isNull(),
-                                  F.array().cast(VIOLATION_SCHEMA)) \
-                            .otherwise(lo.violations(c.getField(k),
-                                                     F.concat(p, F.lit("/" + t))))
-                add(v_fn, viol_fn)
+                if name in field_type:  # else the check can never fire
+                    add_field(name, sub)
 
         if s.property_names is not None:
             # field names are compile-time literals on shredded structs, but a
@@ -692,23 +1007,15 @@ class ColumnarCompiler:
                 bad = [k for k in names
                        if not nv._passes(pn, k, base_uri, nv.fuel)]
             if bad:
-                # one violation per PRESENT bad name at the object's pointer
-                # (interpreter/variant/MapType granularity)
-                def pn_viols(c: Column, p: Column, b=bad) -> Column:
-                    def mk(k: str) -> Column:
-                        r = self._refb("propertyNames", dtype, name=k)
-                        if r is not None:
-                            return _viol_col("propertyNames", p, r(c))
-                        return _viol("propertyNames", p,
-                                     f"property name '{k}' invalid")
-                    return F.when(c.isNull(), F.array().cast(VIOLATION_SCHEMA)) \
-                            .otherwise(_concat_viols([
-                                F.when(present(c, k), F.array(mk(k)))
-                                 .otherwise(F.array().cast(VIOLATION_SCHEMA))
-                                for k in b]))
-                add(lambda c, b=bad: _guard(c, ~reduce(
-                        lambda x, y: x | y, (present(c, k) for k in b))),
-                    pn_viols)
+                # violations sit at the object's pointer (interpreter /
+                # variant / MapType granularity)
+                def pn_viol(c: Column, p: Column, k: str) -> Column:
+                    r = self._refb("propertyNames", at, name=k)
+                    if r is not None:
+                        return _viol_col("propertyNames", p, r(c))
+                    return _viol("propertyNames", p,
+                                 f"property name '{k}' invalid")
+                add_none_present(bad, pn_viol)
 
         if s.additional_properties is not None:
             declared = {n for n, _ in (s.properties or [])}
@@ -725,40 +1032,12 @@ class ColumnarCompiler:
                     if not s.additional_properties:
                         # one 'false' violation per present extra key
                         # (reference validates each against `false`)
-                        def ap_viols(c: Column, p: Column, e=extra) -> Column:
-                            return F.when(c.isNull(),
-                                          F.array().cast(VIOLATION_SCHEMA)) \
-                                    .otherwise(_concat_viols([
-                                        F.when(present(c, k), F.array(_viol(
-                                            "false",
-                                            F.concat(p, F.lit(
-                                                "/" + k.replace("~", "~0")
-                                                        .replace("/", "~1"))),
-                                            "Boolean schema 'false' rejects "
-                                            "all values")))
-                                         .otherwise(F.array()
-                                                    .cast(VIOLATION_SCHEMA))
-                                        for k in e]))
-                        add(lambda c, e=extra: _guard(c, ~reduce(
-                                lambda x, y: x | y,
-                                (present(c, k) for k in e))),
-                            ap_viols)
+                        add_none_present(extra, lambda c, p, k: _viol(
+                            "false", F.concat(p, F.lit("/" + _ptr_token(k))),
+                            "Boolean schema 'false' rejects all values"))
                 else:
                     for k in extra:
-                        low = self._lower(s.additional_properties, field_type[k],
-                                          base_uri, depth + 1)
-                        tok = k.replace("~", "~0").replace("/", "~1")
-
-                        def v_fn(c: Column, lo=low, kk=k) -> Column:
-                            return F.when(c.isNull() | c.getField(kk).isNull(), F.lit(True)) \
-                                    .otherwise(lo.valid(c.getField(kk)))
-
-                        def viol_fn(c: Column, p: Column, lo=low, kk=k, t=tok) -> Column:
-                            return F.when(c.isNull() | c.getField(kk).isNull(),
-                                          F.array().cast(VIOLATION_SCHEMA)) \
-                                    .otherwise(lo.violations(c.getField(kk),
-                                                             F.concat(p, F.lit("/" + t))))
-                        add(v_fn, viol_fn)
+                        add_field(k, s.additional_properties)
 
         if s.pattern_properties:
             declared_by_pattern: list[tuple[str, Schema]] = s.pattern_properties
@@ -766,66 +1045,50 @@ class ColumnarCompiler:
                 if not java_regex_safe(pat):
                     raise CompileFallback(f"patternProperties regex {pat!r}")
                 for k in names:
-                    if re.search(pat, k) is None:
-                        continue
-                    low = self._lower(sub, field_type[k], base_uri, depth + 1)
-                    tok = k.replace("~", "~0").replace("/", "~1")
+                    if re.search(pat, k) is not None:
+                        add_field(k, sub)
 
-                    def v_fn(c: Column, lo=low, kk=k) -> Column:
-                        return F.when(c.isNull() | c.getField(kk).isNull(), F.lit(True)) \
-                                .otherwise(lo.valid(c.getField(kk)))
+        self._lower_dependencies(s, base_uri, at, add, add_simple, present,
+                                 with_ref=True)
 
-                    def viol_fn(c: Column, p: Column, lo=low, kk=k, t=tok) -> Column:
-                        return F.when(c.isNull() | c.getField(kk).isNull(),
-                                      F.array().cast(VIOLATION_SCHEMA)) \
-                                .otherwise(lo.violations(c.getField(kk),
-                                                         F.concat(p, F.lit("/" + t))))
-                    add(v_fn, viol_fn)
+    def _lower_dependencies(self, s: SchemaObject, base_uri: str,
+                            at: _TypedAt, add, add_simple, has,
+                            with_ref: bool) -> None:
+        """``dependencies`` over a struct or map value; ``has(c, k)`` is its
+        key-presence test. ``with_ref`` is False on the MapType path, whose
+        object keywords all keep their structured messages."""
+        for key, dep in (s.dependencies or []):
+            if dep.required_props is not None:
+                reqs = dep.required_props
+                dref = self._dependencies_ref(
+                    key, reqs, at, lambda c, x: ~has(c, x)) if with_ref else None
+                add_simple(
+                    lambda c, k=key, r=reqs: F.when(
+                        has(c, k),
+                        reduce(lambda a, b: a & b, (has(c, x) for x in r))
+                        if r else F.lit(True)).otherwise(F.lit(True)),
+                    "dependencies", f"{key!r} requires {dep.required_props}",
+                    ref=dref)
+            if dep.schema is not None:
+                low = self._lower(dep.schema, base_uri, at.child(at.dtype))
 
-        if s.dependencies:
-            for key, dep in s.dependencies:
-                if dep.required_props is not None:
-                    reqs = dep.required_props
-                    dref = None
-                    if self.message_style == "reference" and reqs:
-                        # interpreter ctx: req = first MISSING prop (runtime)
-                        def dref(c: Column, k=key, r=tuple(reqs)) -> Column:
-                            from .lean_messages import ref_prefix
-                            first_missing = F.coalesce(
-                                *[F.when(~present(c, x), F.lit(x)) for x in r],
-                                F.lit(r[0]))
-                            pre = ref_prefix("dependencies", key=k, req="\x00")
-                            head, tail = pre.split("\x00")
-                            return F.concat(
-                                F.lit(head), first_missing, F.lit(tail),
-                                F.coalesce(lean_compress_typed(c, dtype),
-                                           F.lit("null")))
-                    add_simple(
-                        lambda c, k=key, r=reqs: F.when(
-                            present(c, k),
-                            reduce(lambda a, b: a & b, (present(c, x) for x in r))
-                            if r else F.lit(True)).otherwise(F.lit(True)),
-                        "dependencies", f"{key!r} requires {dep.required_props}",
-                        ref=dref)
-                if dep.schema is not None:
-                    low = self._lower(dep.schema, dtype, base_uri, depth + 1)
+                def v_fn(c: Column, lo=low, k=key) -> Column:
+                    return F.when(c.isNull() | ~has(c, k), F.lit(True)) \
+                            .otherwise(lo.valid(c))
 
-                    def v_fn(c: Column, lo=low, k=key) -> Column:
-                        return F.when(c.isNull() | ~present(c, k), F.lit(True)) \
-                                .otherwise(lo.valid(c))
+                def viol_fn(c: Column, p: Column, lo=low, k=key) -> Column:
+                    return F.when(c.isNull() | ~has(c, k),
+                                  F.array().cast(VIOLATION_SCHEMA)) \
+                            .otherwise(lo.violations(c, p))
+                add(v_fn, viol_fn)
 
-                    def viol_fn(c: Column, p: Column, lo=low, k=key) -> Column:
-                        return F.when(c.isNull() | ~present(c, k),
-                                      F.array().cast(VIOLATION_SCHEMA)) \
-                                .otherwise(lo.violations(c, p))
-                    add(v_fn, viol_fn)
-
-    def _lower_map_object(self, s: SchemaObject, dtype: MapType, base_uri: str,
-                          depth: int, add, add_simple) -> None:
+    def _lower_map_object(self, s: SchemaObject, base_uri: str, at: _TypedAt,
+                          add, add_simple) -> None:
         """Object keywords over MapType columns (dynamic keys, uniform value
         type). Uses map_* collection functions + HOFs over map_keys/entries;
         key presence is map_contains_key (a null VALUE still counts as a
         present key, unlike struct shredding)."""
+        dtype = at.dtype
         if not isinstance(dtype.keyType, StringType):
             raise CompileFallback("map object keys must be strings")
         val_t = dtype.valueType
@@ -845,8 +1108,8 @@ class ColumnarCompiler:
 
         if s.properties:
             for name, sub in s.properties:
-                low = self._lower(sub, val_t, base_uri, depth + 1)
-                tok = name.replace("~", "~0").replace("/", "~1")
+                low = self._lower(sub, base_uri, at.child(val_t))
+                tok = _ptr_token(name)
 
                 def v_fn(c: Column, lo=low, k=name) -> Column:
                     return F.when(c.isNull() | ~F.map_contains_key(c, k),
@@ -863,7 +1126,7 @@ class ColumnarCompiler:
 
         if s.property_names is not None:
             pn = s.property_names
-            low = self._lower(pn, StringType(), base_uri, depth + 1)
+            low = self._lower(pn, base_uri, at.child(StringType()))
 
             def pn_viols(c: Column, p: Column, lo=low) -> Column:
                 # one violation per offending name (interpreter granularity)
@@ -884,36 +1147,14 @@ class ColumnarCompiler:
                     lambda k: F.coalesce(lo.valid(k), F.lit(False)))),
                 pn_viols)
 
-        from .regex_dialect import to_java_regex
-        pattern_res = []
-        for pat, _ in (s.pattern_properties or []):
-            jpat = to_java_regex(pat)
-            if jpat is None:
-                raise CompileFallback(f"patternProperties regex {pat!r}")
-            pattern_res.append(jpat)
-        def _entry_key_ptr(kv: Column) -> Column:
-            return F.regexp_replace(
-                F.regexp_replace(kv.getField("key"), "~", "~0"), "/", "~1")
-
-        def _entries_viols(entries_fn, low):
-            """Recurse into each entry's value with a per-key pointer."""
-            def viol_fn(c: Column, p: Column) -> Column:
-                return F.when(c.isNull(), F.array().cast(VIOLATION_SCHEMA)) \
-                        .otherwise(F.flatten(F.transform(
-                            entries_fn(c),
-                            lambda kv: low.violations(
-                                kv.getField("value"),
-                                F.concat(p, F.lit("/"), _entry_key_ptr(kv))))))
-            return viol_fn
+        pattern_res = _java_patterns(s)
 
         if s.pattern_properties:
             for (pat, sub), jpat in zip(s.pattern_properties, pattern_res):
-                low = self._lower(sub, val_t, base_uri, depth + 1)
+                low = self._lower(sub, base_uri, at.child(val_t))
 
                 def matched_fn(c: Column, p=jpat) -> Column:
-                    return F.filter(
-                        F.map_entries(c),
-                        lambda kv: F.regexp_like(kv.getField("key"), F.lit(p)))
+                    return _matched_entries(c, p)
 
                 def v_fn(c: Column, lo=low, m=matched_fn) -> Column:
                     return _guard(c, F.forall(
@@ -921,111 +1162,68 @@ class ColumnarCompiler:
                         lambda kv: F.coalesce(lo.valid(kv.getField("value")),
                                               F.lit(False))))
 
-                add(v_fn, _entries_viols(matched_fn, low))
+                add(v_fn, _entries_viols(matched_fn, low, Column.isNull))
 
         if s.additional_properties is not None:
             declared = [n for n, _ in (s.properties or [])]
 
             def extra_entries(c: Column) -> Column:
-                def is_extra(kv: Column) -> Column:
-                    cond = ~kv.getField("key").isin(*declared) if declared else F.lit(True)
-                    for p in pattern_res:
-                        cond = cond & ~F.regexp_like(kv.getField("key"), F.lit(p))
-                    return cond
-                return F.filter(F.map_entries(c), is_extra)
+                return _extra_entries(c, declared, pattern_res)
 
             if isinstance(s.additional_properties, bool):
                 if not s.additional_properties:
-                    def ap_viols(c: Column, p: Column) -> Column:
-                        # one 'false' violation per extra key (reference
-                        # validates each extra value against `false`)
-                        return F.when(c.isNull(),
-                                      F.array().cast(VIOLATION_SCHEMA)) \
-                                .otherwise(F.transform(
-                                    extra_entries(c),
-                                    lambda kv: F.struct(
-                                        F.lit("false").alias("keyword"),
-                                        F.concat(p, F.lit("/"),
-                                                 _entry_key_ptr(kv))
-                                         .alias("json_pointer"),
-                                        F.lit("Boolean schema 'false' "
-                                              "rejects all values")
-                                         .alias("message"))))
                     add(lambda c: _guard(c, F.size(extra_entries(c)) == 0),
-                        ap_viols)
+                        lambda c, p: F.when(c.isNull(),
+                                            F.array().cast(VIOLATION_SCHEMA))
+                        .otherwise(_false_viols(extra_entries(c), p)))
             else:
-                low = self._lower(s.additional_properties, val_t, base_uri, depth + 1)
+                low = self._lower(s.additional_properties, base_uri, at.child(val_t))
                 add(lambda c, lo=low: _guard(c, F.forall(
                         extra_entries(c),
                         lambda kv: F.coalesce(lo.valid(kv.getField("value")),
                                               F.lit(False)))),
-                    _entries_viols(extra_entries, low))
+                    _entries_viols(extra_entries, low, Column.isNull))
 
-        if s.dependencies:
-            for key, dep in s.dependencies:
-                if dep.required_props is not None:
-                    reqs = dep.required_props
-                    add_simple(
-                        lambda c, k=key, r=reqs: F.when(
-                            F.map_contains_key(c, k),
-                            reduce(lambda a, b: a & b,
-                                   (F.map_contains_key(c, x) for x in r))
-                            if r else F.lit(True)).otherwise(F.lit(True)),
-                        "dependencies", f"{key!r} requires {dep.required_props}")
-                if dep.schema is not None:
-                    low = self._lower(dep.schema, dtype, base_uri, depth + 1)
-
-                    def v_fn(c: Column, lo=low, k=key) -> Column:
-                        return F.when(c.isNull() | ~F.map_contains_key(c, k),
-                                      F.lit(True)).otherwise(lo.valid(c))
-
-                    def viol_fn(c: Column, p: Column, lo=low, k=key) -> Column:
-                        return F.when(c.isNull() | ~F.map_contains_key(c, k),
-                                      F.array().cast(VIOLATION_SCHEMA)) \
-                                .otherwise(lo.violations(c, p))
-                    add(v_fn, viol_fn)
+        self._lower_dependencies(s, base_uri, at, add, add_simple,
+                                 F.map_contains_key, with_ref=False)
 
     # ---- arrays -------------------------------------------------------------
 
-    def _lower_array(self, s: SchemaObject, dtype: DataType, base_uri: str,
-                     depth: int, add, add_simple) -> None:
-        has_arr_kw = any([
-            s.items is not None, s.additional_items is not None,
-            s.max_items is not None, s.min_items is not None,
-            s.unique_items, s.contains is not None,
-        ])
-        if not has_arr_kw or not isinstance(dtype, ArrayType):
+    def _lower_array(self, s: SchemaObject, base_uri: str, at: _TypedAt,
+                     add, add_simple) -> None:
+        dtype = at.dtype
+        if not _has_array_keywords(s) or not isinstance(dtype, ArrayType):
             return
         elem_t = dtype.elementType
 
         if s.max_items is not None:
             m = s.max_items
             add_simple(lambda c, m=m: F.size(c) <= m, "maxItems", f"> {m}",
-                       ref=self._refb("maxItems", dtype, count_fn=F.size,
+                       ref=self._refb("maxItems", at, count_fn=F.size,
                                       limit=m))
         if s.min_items is not None:
             m = s.min_items
             add_simple(lambda c, m=m: F.size(c) >= m, "minItems", f"< {m}",
-                       ref=self._refb("minItems", dtype, count_fn=F.size,
+                       ref=self._refb("minItems", at, count_fn=F.size,
                                       limit=m))
         if s.unique_items:
             add_simple(lambda c: F.size(F.array_distinct(c)) == F.size(c),
                        "uniqueItems", "duplicate elements",
-                       ref=self._refb("uniqueItems", dtype))
+                       ref=self._refb("uniqueItems", at))
 
         if s.items is not None and not s.items.is_tuple:
-            low = self._lower(s.items.single, elem_t, base_uri, depth + 1, "null")
+            low = self._lower(s.items.single, base_uri, at.child(elem_t, "null"))
             add(
                 lambda c, lo=low: _guard(
                     c, F.forall(c, lambda e: F.coalesce(lo.valid(e), F.lit(False)))),
                 lambda c, p, lo=low: F.when(c.isNull(), F.array().cast(VIOLATION_SCHEMA))
-                .otherwise(F.flatten(_transform_with_index(
+                .otherwise(F.flatten(F.transform(
                     c, lambda e, i: lo.violations(
                         e, F.concat(p, F.lit("/"), i.cast("string")))))),
             )
         elif s.items is not None and s.items.is_tuple:
             for i, sub in enumerate(s.items.tuple_items):
-                low = self._lower(sub, elem_t, base_uri, depth + 1, "null")
+                low = self._lower(sub, base_uri, at.child(elem_t, "null"))
 
                 def v_fn(c: Column, lo=low, i=i) -> Column:
                     e = F.get(c, i)
@@ -1041,33 +1239,24 @@ class ColumnarCompiler:
 
             if s.additional_items is not None:
                 k = len(s.items.tuple_items)
-                low = self._lower(s.additional_items, elem_t, base_uri, depth + 1, "null")
+                low = self._lower(s.additional_items, base_uri, at.child(elem_t, "null"))
                 add(
                     lambda c, lo=low, k=k: _guard(
                         c, F.forall(F.slice(c, k + 1, F.greatest(F.size(c) - k, F.lit(0))),
                                     lambda e: F.coalesce(lo.valid(e), F.lit(False)))),
                     lambda c, p, lo=low, k=k: F.when(
                         c.isNull(), F.array().cast(VIOLATION_SCHEMA))
-                    .otherwise(F.flatten(_transform_with_index(
+                    .otherwise(F.flatten(F.transform(
                         F.slice(c, k + 1, F.greatest(F.size(c) - k, F.lit(0))),
                         lambda e, i: lo.violations(
                             e, F.concat(p, F.lit("/"), (i + k).cast("string")))))),
                 )
 
         if s.contains is not None:
-            low = self._lower(s.contains, elem_t, base_uri, depth + 1, "null")
+            low = self._lower(s.contains, base_uri, at.child(elem_t, "null"))
             lo_n = s.min_contains if s.min_contains is not None else 1
             hi_n = s.max_contains
-            cref = None
-            if self.message_style == "reference":
-                ref_empty = self._refb("contains", dtype,
-                                       prefix_key="contains_empty")
-                ref_nomatch = self._refb("contains", dtype)
-
-                def cref(c: Column) -> Column:
-                    # mirror the interpreter: empty-array message iff size==0
-                    return F.when(F.size(c) == 0, ref_empty(c)) \
-                            .otherwise(ref_nomatch(c))
+            cref = self._contains_ref(at, F.size)
             if lo_n == 1 and hi_n is None:
                 add_simple(
                     lambda c, lo=low: (F.size(c) > 0)
@@ -1091,110 +1280,6 @@ class ColumnarCompiler:
                     "contains",
                     f"match count outside [{lo_n}, {hi_n}]",
                     ref=cref)
-
-    # ---- combinators ----------------------------------------------------------
-
-    def _lower_combinators(self, s: SchemaObject, dtype: DataType, base_uri: str,
-                           depth: int, add, null_means: str = "absent") -> None:
-        if s.all_of is not None:
-            for sub in s.all_of:
-                low = self._lower(sub, dtype, base_uri, depth + 1, null_means)
-                add(low.valid, low.violations)
-        def branch_errs(c: Column, p: Column, lows) -> Column:
-            """Lean-array-of-arrays of per-branch violation MESSAGES — the
-            `Errors:` slot of the reference anyOf / oneOf(0) strings
-            (messages are reference-style recursively, so the embedded
-            strings byte-match the interpreter's _branch_errors)."""
-            parts = [F.concat(
-                F.lit("#["),
-                F.array_join(F.transform(lo.violations(c, p),
-                                         lambda x: x.getField("message")),
-                             ", "),
-                F.lit("]")) for lo in lows]
-            return F.concat(F.lit("#["),
-                            F.concat_ws(", ", *parts) if parts else F.lit(""),
-                            F.lit("]"))
-
-        if s.any_of is not None:
-            lows = [self._lower(sub, dtype, base_uri, depth + 1, null_means) for sub in s.any_of]
-            def v_fn(c: Column, ls=lows) -> Column:
-                if not ls:
-                    return F.lit(False)  # empty anyOf: no branch can match
-                return reduce(lambda a, b: a | b,
-                              (F.coalesce(lo.valid(c), F.lit(False)) for lo in ls))
-
-            def any_viol(c: Column, p: Column, v=v_fn, ls=lows) -> Column:
-                if self.message_style == "reference":
-                    msg = F.concat(
-                        F.lit("anyOf: no schemas matched. Errors: "),
-                        branch_errs(c, p, ls), F.lit(" "),
-                        F.coalesce(lean_compress_typed(c, dtype),
-                                   F.lit("null")))
-                    bad = F.array(_viol_col("anyOf", p, msg))
-                else:
-                    bad = F.array(_viol("anyOf", p, "no branch matched"))
-                return F.when(v(c), F.array().cast(VIOLATION_SCHEMA)) \
-                        .otherwise(bad)
-            add(v_fn, any_viol)
-        if s.one_of is not None:
-            lows = [self._lower(sub, dtype, base_uri, depth + 1, null_means) for sub in s.one_of]
-            def v1_fn(c: Column, ls=lows) -> Column:
-                if not ls:
-                    return F.lit(False)  # empty oneOf: zero matches != 1
-                return reduce(lambda a, b: a + b,
-                              (F.coalesce(lo.valid(c), F.lit(False)).cast("int")
-                               for lo in ls)) == 1
-
-            def one_viol(c: Column, p: Column, v=v1_fn, ls=lows) -> Column:
-                if self.message_style == "reference":
-                    n = reduce(lambda a, b: a + b,
-                               (F.coalesce(lo.valid(c), F.lit(False))
-                                 .cast("int") for lo in ls)) \
-                        if ls else F.lit(0)
-                    compressed = F.coalesce(lean_compress_typed(c, dtype),
-                                            F.lit("null"))
-                    msg = F.when(
-                        n == 0,
-                        F.concat(F.lit("oneOf: expected exactly 1 match but "
-                                       "got 0. Errors: "),
-                                 branch_errs(c, p, ls), F.lit(" "),
-                                 compressed)) \
-                        .otherwise(F.concat(
-                            F.lit("oneOf: expected exactly 1 match but got "),
-                            n.cast("string"), F.lit(" "), compressed))
-                    bad = F.array(_viol_col("oneOf", p, msg))
-                else:
-                    bad = F.array(_viol("oneOf", p, "matched != 1 branches"))
-                return F.when(v(c), F.array().cast(VIOLATION_SCHEMA)) \
-                        .otherwise(bad)
-            add(v1_fn, one_viol)
-        if s.not_ is not None:
-            low = self._lower(s.not_, dtype, base_uri, depth + 1, null_means)
-            def vn_fn(c: Column, lo=low) -> Column:
-                return ~F.coalesce(lo.valid(c), F.lit(False))
-            nref = self._refb("not", dtype)
-            add(vn_fn, lambda c, p, v=vn_fn, r=nref: F.when(
-                    v(c), F.array().cast(VIOLATION_SCHEMA))
-                .otherwise(F.array(
-                    _viol_col("not", p, r(c)) if r is not None
-                    else _viol("not", p, "schema matched but must not"))))
-        if s.if_ is not None:
-            if_low = self._lower(s.if_, dtype, base_uri, depth + 1, null_means)
-            then_low = self._lower(s.then_, dtype, base_uri, depth + 1, null_means) \
-                if s.then_ is not None else _LOWERED_TRUE
-            else_low = self._lower(s.else_, dtype, base_uri, depth + 1, null_means) \
-                if s.else_ is not None else _LOWERED_TRUE
-            add(
-                lambda c: F.when(F.coalesce(if_low.valid(c), F.lit(False)),
-                                 then_low.valid(c)).otherwise(else_low.valid(c)),
-                lambda c, p: F.when(F.coalesce(if_low.valid(c), F.lit(False)),
-                                    then_low.violations(c, p))
-                .otherwise(else_low.violations(c, p)),
-            )
-
-
-def _transform_with_index(col: Column, fn) -> Column:
-    return F.transform(col, lambda e, i: fn(e, i))
 
 
 def _static_type_names(dtype: DataType) -> set[str]:

@@ -28,12 +28,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StructType
 
-from pyspark.sql.types import ArrayType
-
 from ..compiler import VIOLATION_SCHEMA, ColumnarCompiler, CompileFallback
 from ..interpreter import DEFAULT_FUEL, CompiledValidator
 from ..plan_cache import plan_memo
-from ..schema_ast import SchemaObject, parse_schema
+from ..plans.fused import (
+    FusedUnsupported,
+    _span_row_plans,
+    _spans_front_end,
+    validate_documents_fused,
+)
 
 RESULT_SCHEMA = (
     "struct<valid:boolean,"
@@ -103,62 +106,17 @@ def validate_documents_exploded(
     input bytes at 100 TB — with map-side partial aggregation; AQE coalesces
     and splits skewed reducers.
     """
-    parsed = parse_schema(schema_json)
-    if not isinstance(parsed, SchemaObject) or parsed.properties is None:
-        raise CompileFallback("explode strategy needs an object schema")
-    spans_schema = dict((parsed.raw or {}).get("properties", {}))
-    span_prop = spans_schema.pop(spans_col, None)
-    if span_prop is None or not isinstance(df.schema[spans_col].dataType, ArrayType):
-        raise CompileFallback("explode strategy needs an array column")
-    items = span_prop.get("items")
-    if items is None or isinstance(items, list):
-        raise CompileFallback("explode strategy needs Single-items semantics")
-
-    def build() -> dict:
-        # --- doc-level plan: same schema minus the spans items subschema,
-        # but compiled with the ORIGINAL root registered so root-relative
-        # $refs (e.g. '#/properties/x') still resolve (ADVICE r1) ---------
-        doc_schema_json = dict(parsed.raw)
-        doc_props = dict(doc_schema_json.get("properties", {}))
-        span_prop_doc = dict(span_prop)
-        span_prop_doc.pop("items", None)  # array-size keywords stay doc-level
-        doc_props[spans_col] = span_prop_doc
-        doc_schema_json["properties"] = doc_props
-        comp = ColumnarCompiler(schema_json, uri=uri, registry=registry,
-                                message_style=message_style,
-                                assert_formats=assert_formats)
-        doc_dtype = StructType([f for f in df.schema.fields])
-        doc_low = comp.lower_node(doc_schema_json, doc_dtype, base_uri=uri)
-
-        # --- span-level plan: items subschema against the element struct,
-        # lowered as a NODE of the root compiler (full resolver context) --
-        elem_t = df.schema[spans_col].dataType.elementType
-        elem_low = comp.lower_node(items, elem_t,
-                                   base_uri=comp.root_base_uri(),
-                                   null_means="null")
-
-        instance = F.struct(*[F.col(c) for c in df.columns])
-        doc_valid = F.coalesce(doc_low.valid(instance), F.lit(False))
-        doc_viols = F.when(doc_valid, F.array().cast(VIOLATION_SCHEMA)) \
-                     .otherwise(doc_low.violations(instance, F.lit("")))
-        span_valid = F.when(F.col("_pos").isNull(), F.lit(True)) \
-                      .otherwise(F.coalesce(elem_low.valid(F.col("_span")),
-                                            F.lit(False)))
-        span_viols = F.when(span_valid, F.array().cast(VIOLATION_SCHEMA)) \
-                      .otherwise(elem_low.violations(
-                          F.col("_span"),
-                          F.concat(F.lit(f"/{spans_col}/"),
-                                   F.col("_pos").cast("string"))))
-        return {"dok": doc_valid, "dviols": doc_viols,
-                "sv": span_valid, "svv": span_viols}
+    doc_schema, items = _spans_front_end(df, schema_json, spans_col,
+                                         CompileFallback, "explode strategy")
 
     # schema-derived Columns are unresolved and name-bound: memoized so a
     # checkpointed run's per-unit loop (checkpointing.run) and repeat batches
     # skip the py4j expression rebuild (plan_cache docstring)
-    plan = plan_memo("exploded", df, schema_json, registry,
-                     (spans_col, uri, message_style, assert_formats), build)
-    doc_valid, doc_viols = plan["dok"], plan["dviols"]
-    span_valid, span_viols = plan["sv"], plan["svv"]
+    doc_valid, doc_viols, span_valid, span_viols = plan_memo(
+        "exploded", df, schema_json, registry,
+        (spans_col, uri, message_style, assert_formats),
+        lambda: _span_row_plans(df, schema_json, spans_col, doc_schema, items,
+                                registry, uri, message_style, assert_formats))
 
     # doc-level checks are row-local: evaluate them BEFORE the explode so the
     # document (and its spans array) is never duplicated per span row. Only
@@ -227,50 +185,13 @@ def violation_rows_fast(
     generator row (_pos 0 or null-spans row). Plan = Scan -> Generate ->
     Project -> Filter -> Generate; every stage is pipelined, nothing moves.
     """
-    parsed = parse_schema(schema_json)
-    if not isinstance(parsed, SchemaObject) or parsed.properties is None:
-        raise CompileFallback("violation_rows_fast needs an object schema")
-    span_prop = dict((parsed.raw or {}).get("properties", {})).get(spans_col)
-    if span_prop is None or not isinstance(df.schema[spans_col].dataType, ArrayType):
-        raise CompileFallback("violation_rows_fast needs the array column")
-    items = span_prop.get("items")
-    if items is None or isinstance(items, list):
-        raise CompileFallback("violation_rows_fast needs Single-items semantics")
+    doc_schema, items = _spans_front_end(
+        df, schema_json, spans_col, CompileFallback, "violation_rows_fast")
 
     def build() -> dict:
-        # doc-level plan (schema minus items) + span-level plan, as in the
-        # explode strategy: both lowered as NODES of the root compiler so
-        # root-relative $refs keep resolving (ADVICE r1)
-        doc_schema_json = dict(parsed.raw)
-        doc_props = dict(doc_schema_json.get("properties", {}))
-        span_prop_doc = dict(span_prop)
-        span_prop_doc.pop("items", None)
-        doc_props[spans_col] = span_prop_doc
-        doc_schema_json["properties"] = doc_props
-        comp = ColumnarCompiler(schema_json, uri=uri, registry=registry,
-                                message_style=message_style,
-                                assert_formats=assert_formats)
-        doc_dtype = StructType([f for f in df.schema.fields])
-        doc_low = comp.lower_node(doc_schema_json, doc_dtype, base_uri=uri)
-
-        elem_t = df.schema[spans_col].dataType.elementType
-        elem_low = comp.lower_node(items, elem_t,
-                                   base_uri=comp.root_base_uri(),
-                                   null_means="null")
-
-        instance = F.struct(*[F.col(c) for c in df.columns])
-        doc_valid = F.coalesce(doc_low.valid(instance), F.lit(False))
-        doc_viols = F.when(doc_valid, F.array().cast(VIOLATION_SCHEMA)) \
-                     .otherwise(doc_low.violations(instance, F.lit("")))
-
-        span_valid = F.when(F.col("_pos").isNull(), F.lit(True)) \
-                      .otherwise(F.coalesce(elem_low.valid(F.col("_span")),
-                                            F.lit(False)))
-        span_viols = F.when(span_valid, F.array().cast(VIOLATION_SCHEMA)) \
-                      .otherwise(elem_low.violations(
-                          F.col("_span"),
-                          F.concat(F.lit(f"/{spans_col}/"),
-                                   F.col("_pos").cast("string"))))
+        _, doc_viols, _, span_viols = _span_row_plans(
+            df, schema_json, spans_col, doc_schema, items, registry, uri,
+            message_style, assert_formats)
         # doc-level violations attach exactly once per doc: on the first
         # generator row (pos 0, or the null row for empty/null spans)
         first_row = F.col("_pos").isNull() | (F.col("_pos") == 0)
@@ -326,7 +247,6 @@ def violation_rows_best(
     Output is row-identical to violation_rows_fast (passing docs contribute
     no rows by definition; pinned in tests). Falls back to the single-pass
     form when the schema is outside the fused subset."""
-    from ..plans.fused import FusedUnsupported, validate_documents_fused
     try:
         flagged = validate_documents_fused(
             df, schema_json, spans_col=spans_col, registry=registry, uri=uri,
@@ -566,7 +486,6 @@ def validate_spans_best(df: DataFrame, schema_json: Any,
     the other validators' contract."""
     if keep_cols is None:
         keep_cols = [c for c in df.columns if c not in ("valid", "violations")]
-    from ..plans.fused import FusedUnsupported, validate_documents_fused
     try:
         return validate_documents_fused(df, schema_json, spans_col=spans_col,
                                         registry=registry, uri=uri,

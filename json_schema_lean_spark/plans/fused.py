@@ -30,6 +30,11 @@ evaluate the interpreted collector. One scan, zero shuffle, full detail.
 Schemas outside the supported subset raise :class:`FusedUnsupported`; callers
 fall back to ``validate_documents_exploded`` (shuffle, full keyword coverage)
 or the forall plan.
+
+The spans front end shared by the fused, explode and violation-row
+strategies lives here too: the shape checks and the document-level plan
+(``_spans_front_end``, ``_lower_spans_document``) and the per-span row plans
+of the two posexplode strategies (``_span_row_plans``).
 """
 
 from __future__ import annotations
@@ -50,8 +55,10 @@ from pyspark.sql.types import (
 from ..compiler import (
     VIOLATION_SCHEMA,
     ColumnarCompiler,
+    Lowered,
     _FRACTIONAL,
     _INTEGRAL,
+    _let,
     _static_type_names,
 )
 from ..plan_cache import plan_memo
@@ -209,16 +216,6 @@ def _n_lines(joined: Column) -> Column:
     count('\\n') + 1."""
     return (F.length(joined)
             - F.length(F.replace(joined, F.lit("\n"), F.lit(""))) + 1)
-
-
-def _let(expr: Column, fn) -> Column:
-    """Let-binding inside an expression: evaluate `expr` ONCE, pass it to
-    `fn` as a lambda variable. Catalyst has no common-subexpression reuse
-    for interpreted expressions (and array_compact is rewritten to an
-    interpreted lambda filter), but a higher-order function evaluates its
-    array argument once and binds it as a real attribute (r6; same trick
-    as variant._let)."""
-    return F.get(F.transform(F.array(expr), fn), 0)
 
 
 def _joined_line_scaffold(field_arr: Column, fast_fn, slow_fn) -> Column:
@@ -391,11 +388,84 @@ def _fused_property_clauses(s: SchemaObject, field_arr: Column,
         # newline-join trick and its embedded-newline slow branch (which
         # this replaces) all disappear; empty/all-null arrays yield null
         # min/max -> coalesce(True), the old n_elems==0 branch.
+        # the exactness argument above needs a single-byte succ()
+        assert ord(prefix[-1]) < 0x7F, prefix
         succ = prefix[:-1] + chr(ord(prefix[-1]) + 1)
         out.append(
             F.coalesce(F.array_min(field_arr) >= F.lit(prefix), F.lit(True))
             & F.coalesce(F.array_max(field_arr) < F.lit(succ), F.lit(True)))
     return out, covers_nulls
+
+
+def _spans_front_end(df: DataFrame, schema_json: Any, spans_col: str,
+                     fail: type, what: str) -> tuple[dict, Any]:
+    """Shape checks shared by the three spans strategies (fused, explode,
+    violation rows): an object schema whose ``spans_col`` property has
+    Single-items ``items`` and is an array column of ``df``. Raises
+    ``fail`` (each strategy's own fallback exception) naming ``what``.
+
+    Returns ``(doc_schema, items)``: the schema with the spans property's
+    ``items`` removed — the document-level plan; the property's array-size
+    keywords stay there — and the items subschema."""
+    parsed = parse_schema(schema_json)
+    if not isinstance(parsed, SchemaObject) or parsed.properties is None:
+        raise fail(f"{what} needs an object schema")
+    props = dict(parsed.raw.get("properties", {}))
+    span_prop = props.get(spans_col)
+    if span_prop is None or not isinstance(df.schema[spans_col].dataType, ArrayType):
+        raise fail(f"{what} needs the array column")
+    items = span_prop.get("items")
+    if items is None or isinstance(items, list):
+        raise fail(f"{what} needs Single-items semantics")
+    props[spans_col] = {k: v for k, v in span_prop.items() if k != "items"}
+    return {**parsed.raw, "properties": props}, items
+
+
+def _lower_spans_document(df: DataFrame, schema_json: Any, doc_schema: dict,
+                          registry: Optional[dict[str, Any]], uri: str,
+                          message_style: str, assert_formats: bool
+                          ) -> tuple[ColumnarCompiler, StructType, Lowered]:
+    """``(compiler, row dtype, document-level plan)``. The document plan
+    (``doc_schema`` from _spans_front_end) is lowered as a NODE of the root
+    compiler, so root-relative $refs (e.g. '#/properties/x') still resolve
+    (ADVICE r1)."""
+    comp = ColumnarCompiler(schema_json, uri=uri, registry=registry,
+                            message_style=message_style,
+                            assert_formats=assert_formats)
+    dtype = StructType([f for f in df.schema.fields])
+    return comp, dtype, comp.lower_node(doc_schema, dtype, base_uri=uri)
+
+
+def _span_row_plans(df: DataFrame, schema_json: Any, spans_col: str,
+                    doc_schema: dict, items: Any,
+                    registry: Optional[dict[str, Any]], uri: str,
+                    message_style: str, assert_formats: bool
+                    ) -> tuple[Column, Column, Column, Column]:
+    """Per-row plans of the strategies that posexplode the spans column
+    into ``_pos`` / ``_span``: ``(doc_valid, doc_viols, span_valid,
+    span_viols)``. The span plan lowers the items subschema against the
+    element struct as a NODE of the root compiler (full resolver
+    context); a null ``_pos`` (empty or null spans) passes."""
+    comp, dtype, doc_low = _lower_spans_document(
+        df, schema_json, doc_schema, registry, uri, message_style,
+        assert_formats)
+    elem_t = df.schema[spans_col].dataType.elementType
+    elem_low = comp.lower_node(items, elem_t, base_uri=comp.root_base_uri(),
+                               null_means="null")
+
+    instance = F.struct(*[F.col(c) for c in df.columns])
+    doc_valid = F.coalesce(doc_low.valid(instance), F.lit(False))
+    doc_viols = F.when(doc_valid, F.array().cast(VIOLATION_SCHEMA)) \
+                 .otherwise(doc_low.violations(instance, F.lit("")))
+    span_valid = F.when(F.col("_pos").isNull(), F.lit(True)) \
+                  .otherwise(F.coalesce(elem_low.valid(F.col("_span")),
+                                        F.lit(False)))
+    span_viols = F.when(span_valid, F.array().cast(VIOLATION_SCHEMA)) \
+                  .otherwise(elem_low.violations(
+                      F.col("_span"),
+                      F.concat(F.lit(f"/{spans_col}/"),
+                               F.col("_pos").cast("string"))))
+    return doc_valid, doc_viols, span_valid, span_viols
 
 
 def validate_documents_fused(
@@ -413,33 +483,13 @@ def validate_documents_fused(
     detail evaluated ONLY on failing rows. Output schema matches
     ``validate_dataframe`` restricted to keep_cols (default: all columns).
     Raises FusedUnsupported when the schema leaves the fused subset."""
-    parsed = parse_schema(schema_json)
-    if not isinstance(parsed, SchemaObject) or parsed.raw is None:
-        raise FusedUnsupported("fused plan needs an object schema")
-    props = dict((parsed.raw or {}).get("properties", {}))
-    span_prop = props.get(spans_col)
-    if span_prop is None or not isinstance(df.schema[spans_col].dataType, ArrayType):
-        raise FusedUnsupported("fused plan needs the array column")
-    items = span_prop.get("items")
-    if items is None or isinstance(items, list):
-        raise FusedUnsupported("fused plan needs Single-items semantics")
+    doc_schema, items = _spans_front_end(df, schema_json, spans_col,
+                                         FusedUnsupported, "fused plan")
 
     def build() -> dict:
-        comp = ColumnarCompiler(schema_json, uri=uri, registry=registry,
-                                message_style=message_style,
-                                assert_formats=assert_formats)
-
-        # doc-level plan = schema minus the items subschema (array-size
-        # keywords stay doc-level), lowered by the general compiler
-        doc_schema_json = dict(parsed.raw)
-        doc_props = dict(doc_schema_json.get("properties", {}))
-        span_prop_doc = dict(span_prop)
-        span_prop_doc.pop("items", None)
-        doc_props[spans_col] = span_prop_doc
-        doc_schema_json["properties"] = doc_props
-        dtype = StructType([f for f in df.schema.fields])
-        # lowered as a node of the root compiler: root-relative $refs resolve
-        doc_low = comp.lower_node(doc_schema_json, dtype, base_uri=uri)
+        comp, dtype, doc_low = _lower_spans_document(
+            df, schema_json, doc_schema, registry, uri, message_style,
+            assert_formats)
 
         items_ast = parse_schema(items)
         root_base = comp.root_base_uri()

@@ -48,6 +48,14 @@ and fall back.
 The only remaining CompileFallback routes to the Arrow interpreter: evil
 $ref cycles (rejected at compile time, like the columnar path), non-Java
 regex dialect, node-budget exhaustion.
+
+``VariantCompiler`` is a subclass of the keyword-lowering core
+(compiler._KeywordLowering), which owns the resolver setup, the ``_lower``
+scaffold, the reference-message builder and the combinators. This module
+supplies only what depends on reading a VARIANT: the keyword methods, the
+message renderings (``_lean_compress_variant``, ``_lean_num_variant``) and
+the descent rule — the ``$ref`` chain, NODE_BUDGET and ``_too_deep_leaf``
+at MAX_VARIANT_DEPTH.
 """
 
 from __future__ import annotations
@@ -55,7 +63,7 @@ from __future__ import annotations
 import json
 import re
 from functools import reduce
-from typing import Any, Callable, Optional
+from typing import Any, Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -65,15 +73,25 @@ from .compiler import (
     VIOLATION_SCHEMA,
     CompileFallback,
     Lowered,
-    _LOWERED_TRUE,
+    _KeywordLowering,
     _cjson,
-    _concat_viols,
+    _entries_viols,
+    _extra_entries,
+    _false_viols,
+    _guard,
+    _has_array_keywords,
+    _has_object_keywords,
+    _java_patterns,
+    _let,
+    _matched_entries,
+    _numeric_bounds,
+    _ptr_token,
     _viol,
     _viol_col,
 )
 from .plan_cache import plan_memo
-from .resolver import DEFAULT_URI, Resolver, find_ref_cycle, resolve_uri
-from .schema_ast import ABSENT, Schema, SchemaObject, parse_schema
+from .resolver import DEFAULT_URI
+from .schema_ast import ABSENT, Schema, SchemaObject
 
 #: max unrolls of any single $ref target along one inline chain — supports
 #: instances of the recursive structure up to this deep; past it the leaf
@@ -89,16 +107,6 @@ MAX_CANON_DEPTH = 24
 NODE_BUDGET = 30_000
 
 _NUM_TYPES = ("BIGINT", "INT", "SMALLINT", "TINYINT", "DOUBLE", "FLOAT")
-
-
-def _guard(v: Column, pred: Column) -> Column:
-    """Absent (SQL NULL) passes every keyword; force definite booleans."""
-    return F.when(v.isNull(), F.lit(True)).otherwise(F.coalesce(pred, F.lit(False)))
-
-
-def _cond_viol(v: Column, ok: Column, keyword: str, ptr: Column, msg: str) -> Column:
-    return F.when(_guard(v, ok), F.array().cast(VIOLATION_SCHEMA)) \
-            .otherwise(F.array(_viol(keyword, ptr, msg)))
 
 
 def _ts(v: Column) -> Column:
@@ -144,15 +152,6 @@ def _varr(v: Column) -> Column:
     return F.try_variant_get(v, "$", "array<variant>")
 
 
-def _ptr_token(name: str) -> str:
-    return name.replace("~", "~0").replace("/", "~1")
-
-
-def _ptr_key(key: Column) -> Column:
-    """RFC 6901 token escaping for a runtime key Column (~ -> ~0, / -> ~1)."""
-    return F.regexp_replace(F.regexp_replace(key, "~", "~0"), "/", "~1")
-
-
 _SIMPLE_KEY = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 #: keys safe inside a quoted bracket path: no quotes/backslashes/control
 #: chars and no brackets (the variant path grammar's treatment of nested
@@ -178,14 +177,6 @@ def _child(v: Column, name: str) -> Column:
 # ---------------------------------------------------------------------------
 # Deep equality via canonical strings (uniqueItems / const / enum)
 # ---------------------------------------------------------------------------
-
-def _let(expr: Column, fn: Callable[[Column], Column]) -> Column:
-    """Let-binding inside an expression: evaluate `expr` ONCE, pass it to
-    `fn` as a lambda variable. Catalyst has no common-subexpression reuse
-    for interpreted projections, but a higher-order function evaluates its
-    array argument once and binds elements as real attributes."""
-    return F.get(F.transform(F.array(expr), fn), 0)
-
 
 def _entry_key_cmp(a: Column, b: Column) -> Column:
     # compare map entries by key only — variant values are not orderable
@@ -378,8 +369,10 @@ def _canon_literal(value: Any) -> Column:
     return F.lit(cached)
 
 
-class VariantCompiler:
-    """Compile a schema once (driver) into variant-expression predicates."""
+class VariantCompiler(_KeywordLowering):
+    """Compile a schema once (driver) into variant-expression predicates.
+    Its descent state ``chain`` is the stack of resolved $ref targets along
+    the inline path (see _through_ref)."""
 
     def __init__(
         self,
@@ -391,154 +384,66 @@ class VariantCompiler:
         deep_ref_behavior: str = "error",
         assert_formats: bool = False,
     ) -> None:
-        #: opt-in draft-7 format assertion (annotation by default; formats.py)
-        self.assert_formats = assert_formats
         #: past-MAX_VARIANT_DEPTH / past-MAX_CANON_DEPTH instance behavior:
         #: "error" = loud job abort (never a wrong verdict, the default);
         #: "invalid" = verdict False + $recursion violation (batch survives,
         #: deep rows flagged for interpreter re-validation) — see
         #: _too_deep_leaf for why neither can match interpreter fuel=1000
         self.deep_ref_behavior = deep_ref_behavior
-        #: "structured" or "reference" (byte-parity Lean reportError strings,
-        #: offending value compressed in at runtime — _lean_compress_variant)
-        self.message_style = message_style
         #: optional pre-projected child variants for ROOT-level property /
         #: required checks (set by validate_json_column_variant's second
         #: Generate barrier): re-navigating `$.k` from the root re-walks the
         #: variant binary at every keyword leaf, while a barrier-projected
         #: struct field is a plain attribute read
         self.child_columns = child_columns
-        self.schema: Schema = parse_schema(schema_json)
-        self.root_uri = uri
-        self._schema_json = schema_json
-        self._registry = registry
-        self.resolver = Resolver()
-        self.resolver.add_schema(schema_json, uri)
-        if registry:
-            for reg_uri, reg_schema in registry.items():
-                self.resolver.add_schema(reg_schema, reg_uri)
-        if find_ref_cycle(self.resolver) is not None:
-            # evil cycles (ref->ref through combinators only) never consume
-            # instance depth, so unrolling can't bound them — Arrow path,
-            # whose fuel semantics match the reference's "Stack overflow"
-            raise CompileFallback("cyclic schema not lowerable to variant ops")
+        super().__init__(schema_json, uri, registry, message_style,
+                         assert_formats)
         self._nodes = 0
         _ensure_analyzer_budget()
+
+    def _reject_cycle(self, cycle) -> None:
+        # evil cycles (ref->ref through combinators only) never consume
+        # instance depth, so unrolling can't bound them — Arrow path,
+        # whose fuel semantics match the reference's "Stack overflow"
+        raise CompileFallback("cyclic schema not lowerable to variant ops")
 
     def lower(self) -> Lowered:
         return self._lower(self.schema, self.root_uri, ())
 
-    def _refb(self, keyword: str, count_fn=None,
-              prefix_key: Optional[str] = None, **ctx):
-        """Reference-style message builder (v -> Column), or None outside
-        reference mode. Twin of ColumnarCompiler._refb with variant-side
-        compress / length / number renderings."""
-        if self.message_style != "reference":
-            return None
-        from .lean_messages import REF_SHAPES, ref_prefix
-        pre = ref_prefix(prefix_key or keyword, **ctx)
-        shape = REF_SHAPES[keyword]
+    # ---- descent rule and value renderings --------------------------------
 
-        def compress(v: Column) -> Column:
-            return F.coalesce(_lean_compress_variant(v), F.lit("null"))
-        if shape == "value":
-            return lambda v: F.concat(F.lit(pre), compress(v))
-        if shape == "strlen":
-            return lambda v: F.concat(F.lit(pre),
-                                      F.length(_sval(v)).cast("string"))
-        if shape == "num":
-            return lambda v: F.concat(F.lit(pre + '"'), _lean_num_variant(v),
-                                      F.lit('"'))
-        if shape == "count_value":
-            return lambda v: F.concat(F.lit(pre), count_fn(v).cast("string"),
-                                      F.lit(" "), compress(v))
-        return None  # pragma: no cover
-
-    # ------------------------------------------------------------------
-
-    def _lower(self, schema: Schema, base_uri: str,
-               chain: tuple[str, ...]) -> Lowered:
-        # `chain` is the stack of resolved $ref targets along this inline
-        # path: a target repeating means we are unrolling a benign cycle
-        # (one unroll per instance-nesting level); an acyclic chain never
-        # repeats, however long
+    def _enter(self, chain: tuple[str, ...]) -> None:
         self._nodes += 1
         if self._nodes > NODE_BUDGET:
             raise CompileFallback(
                 "variant lowering node budget exceeded (branching recursive "
                 "schema)")
-        if isinstance(schema, bool):
-            if schema:
-                return _LOWERED_TRUE
-            return Lowered(
-                valid=lambda v: F.lit(False),
-                violations=lambda v, p: F.array(
-                    _viol("false", p, "Boolean schema 'false' rejects all values")),
-            )
-        s = schema
-        assert isinstance(s, SchemaObject)
 
-        if s.ref is not None:  # $ref overrides siblings (Draft 7)
-            target = resolve_uri(base_uri, s.ref)
-            root, subpath = self.resolver.resolve_path(target)
-            got = self.resolver.get_schema_and_uri(root, subpath)
-            if got is None:
-                rref = self._refb("$ref", base=root, path=subpath)
-                return Lowered(
-                    valid=lambda v: F.lit(False),
-                    violations=lambda v, p: F.array(
-                        _viol_col("$ref", p, rref(v)) if rref is not None
-                        else _viol("$ref", p, f"Could not find {target!r}")),
-                )
-            sub, new_uri = got
-            key = f"{root}#{'/'.join(subpath)}"
-            if chain.count(key) >= MAX_VARIANT_DEPTH:
-                return _too_deep_leaf(key, self.deep_ref_behavior)
-            return self._lower(sub, new_uri, chain + (key,))
+    def _through_ref(self, sub: Schema, uri: str, chain: tuple[str, ...],
+                     key: str) -> Lowered:
+        # a target repeating in the chain means we are unrolling a benign
+        # cycle (one unroll per instance-nesting level); an acyclic chain
+        # never repeats, however long
+        if chain.count(key) >= MAX_VARIANT_DEPTH:
+            return _too_deep_leaf(key, self.deep_ref_behavior)
+        return self._lower(sub, uri, chain + (key,))
 
-        if s.id is not None:
-            base_uri = resolve_uri(base_uri, s.id)
+    def _same_value(self, chain: tuple[str, ...]) -> tuple[str, ...]:
+        return chain
 
-        valid_parts: list[Callable[[Column], Column]] = []
-        viol_parts: list[Callable[[Column, Column], Column]] = []
+    def _render_value(self, v: Column, chain: tuple[str, ...]) -> Column:
+        return _lean_compress_variant(v)
 
-        def add(valid_fn, viol_fn) -> None:
-            valid_parts.append(valid_fn)
-            viol_parts.append(viol_fn)
+    def _render_num(self, v: Column, chain: tuple[str, ...]) -> Column:
+        return _lean_num_variant(v)
 
-        def add_simple(ok_fn, keyword: str, msg: str, ref=None) -> None:
-            if self.message_style == "reference" and ref is not None:
-                add(lambda v, ok=ok_fn: _guard(v, ok(v)),
-                    lambda v, p, ok=ok_fn, kw=keyword, r=ref:
-                    F.when(_guard(v, ok(v)), F.array().cast(VIOLATION_SCHEMA))
-                     .otherwise(F.array(_viol_col(kw, p, r(v)))))
-            else:
-                add(lambda v, ok=ok_fn: _guard(v, ok(v)),
-                    lambda v, p, ok=ok_fn, kw=keyword, m=msg:
-                    _cond_viol(v, ok(v), kw, p, m))
-
-        self._lower_type(s, add_simple)
-        self._lower_const_enum(s, add_simple)
-        self._lower_string(s, add_simple)
-        self._lower_numeric(s, add_simple)
-        self._lower_object(s, base_uri, chain, add, add_simple)
-        self._lower_array(s, base_uri, chain, add, add_simple)
-        self._lower_combinators(s, base_uri, chain, add)
-
-        if not valid_parts:
-            return _LOWERED_TRUE
-
-        def valid(v: Column) -> Column:
-            return reduce(lambda a, b: a & b, (fn(v) for fn in valid_parts))
-
-        def violations(v: Column, p: Column) -> Column:
-            return _concat_viols([fn(v, p) for fn in viol_parts])
-
-        return Lowered(valid=valid, violations=violations)
+    def _string_value(self, v: Column) -> Column:
+        return _sval(v)
 
     # ---- type ---------------------------------------------------------
 
-    def _lower_type(self, s: SchemaObject, add_simple) -> None:
+    def _lower_type(self, s: SchemaObject, base_uri: str,
+                    chain: tuple[str, ...], add, add_simple) -> None:
         if "any" in s.types:
             return
         names = list(s.types)
@@ -561,7 +466,7 @@ class VariantCompiler:
                 return _is_num(v) & _is_integral(v)
             return F.lit(False)  # unknown type name matches nothing
 
-        tref = self._refb("type", types=[str(t) for t in names])
+        tref = self._refb("type", chain, types=[str(t) for t in names])
         if not names:
             add_simple(lambda v: F.lit(False), "type", "expected one of []",
                        ref=tref)
@@ -587,15 +492,16 @@ class VariantCompiler:
         # to NULL -> not equal (correct: it can't equal a shallower literal).
         return _canon(v, _py_depth(value)) == _canon_literal(value)
 
-    def _lower_const_enum(self, s: SchemaObject, add_simple) -> None:
+    def _lower_const_enum(self, s: SchemaObject, base_uri: str,
+                          chain: tuple[str, ...], add, add_simple) -> None:
         if s.const is not ABSENT:
             cval = s.const
             add_simple(lambda v, cv=cval: self._scalar_eq(v, cv),
                        "const", f"expected {_cjson(cval)}",
-                       ref=self._refb("const", const=cval))
+                       ref=self._refb("const", chain, const=cval))
         if s.enum is not None:
             vals = list(s.enum)
-            eref = self._refb("enum", enum=vals)
+            eref = self._refb("enum", chain, enum=vals)
             if not vals:
                 add_simple(lambda v: F.lit(False), "enum", "not in enum",
                            ref=eref)
@@ -606,7 +512,8 @@ class VariantCompiler:
 
     # ---- strings ---------------------------------------------------------
 
-    def _lower_string(self, s: SchemaObject, add_simple) -> None:
+    def _lower_string(self, s: SchemaObject, base_uri: str,
+                      chain: tuple[str, ...], add, add_simple) -> None:
         def gated(pred_fn):
             # string keywords apply only to string values (type-guard)
             return lambda v: F.when(_ts(v) == "STRING", pred_fn(v)) \
@@ -615,12 +522,12 @@ class VariantCompiler:
             n = s.max_length
             add_simple(gated(lambda v, n=n: F.length(_sval(v)) <= n),
                        "maxLength", f"length > {n}",
-                       ref=self._refb("maxLength", limit=n))
+                       ref=self._refb("maxLength", chain, limit=n))
         if s.min_length is not None:
             n = s.min_length
             add_simple(gated(lambda v, n=n: F.length(_sval(v)) >= n),
                        "minLength", f"length < {n}",
-                       ref=self._refb("minLength", limit=n))
+                       ref=self._refb("minLength", chain, limit=n))
         if s.pattern is not None:
             from .regex_dialect import to_java_regex
             pat = s.pattern
@@ -629,7 +536,7 @@ class VariantCompiler:
                 raise CompileFallback(f"pattern not Java-safe: {pat!r}")
             add_simple(gated(lambda v, p=jpat: F.regexp_like(_sval(v), F.lit(p))),
                        "pattern", f"no match for {pat!r}",
-                       ref=self._refb("pattern", pattern=pat))
+                       ref=self._refb("pattern", chain, pattern=pat))
         if self.assert_formats and s.format is not None:
             from .formats import format_predicate
             fmt = s.format
@@ -642,49 +549,31 @@ class VariantCompiler:
 
     # ---- numerics ---------------------------------------------------------
 
-    def _lower_numeric(self, s: SchemaObject, add_simple) -> None:
+    def _lower_numeric(self, s: SchemaObject, base_uri: str,
+                       chain: tuple[str, ...], add, add_simple) -> None:
         def gated(pred_fn):
             return lambda v: F.when(_is_num(v), pred_fn(_dval(v))) \
                               .otherwise(F.lit(True))
-        if s.maximum is not None:
-            m = s.maximum
-            add_simple(gated(lambda d, m=m: d <= m), "maximum", f"> {m}",
-                       ref=self._refb("maximum", limit=m))
-        if s.exclusive_maximum is not None:
-            m = s.exclusive_maximum
-            add_simple(gated(lambda d, m=m: d < m), "exclusiveMaximum", f">= {m}",
-                       ref=self._refb("exclusiveMaximum", limit=m))
-        if s.minimum is not None:
-            m = s.minimum
-            add_simple(gated(lambda d, m=m: d >= m), "minimum", f"< {m}",
-                       ref=self._refb("minimum", limit=m))
-        if s.exclusive_minimum is not None:
-            m = s.exclusive_minimum
-            add_simple(gated(lambda d, m=m: d > m), "exclusiveMinimum", f"<= {m}",
-                       ref=self._refb("exclusiveMinimum", limit=m))
+        for keyword, m, ok, msg in _numeric_bounds(s):
+            add_simple(gated(lambda d, m=m, ok=ok: ok(d, m)), keyword, msg,
+                       ref=self._refb(keyword, chain, limit=m))
         if s.multiple_of is not None:
             m = s.multiple_of
             if m == 0:
                 add_simple(gated(lambda d: F.lit(False)), "multipleOf",
                            "multipleOf 0",
-                           ref=self._refb("multipleOf", limit=m))
+                           ref=self._refb("multipleOf", chain, limit=m))
             else:
                 add_simple(gated(lambda d, m=m: (d / m % 1.0) == 0.0),
                            "multipleOf", f"not a multiple of {m}",
-                           ref=self._refb("multipleOf", limit=m))
+                           ref=self._refb("multipleOf", chain, limit=m))
 
     # ---- objects ---------------------------------------------------------
 
     def _lower_object(self, s: SchemaObject, base_uri: str,
                       chain: tuple[str, ...],
                       add, add_simple) -> None:
-        has_obj_kw = any([
-            s.required, s.properties, s.pattern_properties,
-            s.property_names is not None,
-            s.additional_properties is not None, s.max_properties is not None,
-            s.min_properties is not None, s.dependencies,
-        ])
-        if not has_obj_kw:
+        if not _has_object_keywords(s):
             return
 
         def is_obj(v: Column) -> Column:
@@ -714,7 +603,7 @@ class VariantCompiler:
                 lambda a, b: a & b,
                 (child(v, k).isNotNull() for k in r))),
                 "required", f"missing one of {req}",
-                ref=self._refb("required", required=req))
+                ref=self._refb("required", chain, required=req))
 
         def _nprops(v: Column) -> Column:
             return F.size(_vmap(v))
@@ -722,13 +611,13 @@ class VariantCompiler:
             m = s.max_properties
             add_simple(gated(lambda v, m=m: F.size(_vmap(v)) <= m),
                        "maxProperties", f"> {m}",
-                       ref=self._refb("maxProperties", count_fn=_nprops,
+                       ref=self._refb("maxProperties", chain, count_fn=_nprops,
                                       limit=m))
         if s.min_properties is not None:
             m = s.min_properties
             add_simple(gated(lambda v, m=m: F.size(_vmap(v)) >= m),
                        "minProperties", f"< {m}",
-                       ref=self._refb("minProperties", count_fn=_nprops,
+                       ref=self._refb("minProperties", chain, count_fn=_nprops,
                                       limit=m))
 
         if s.properties:
@@ -793,103 +682,53 @@ class VariantCompiler:
                         F.map_keys(_vmap(v)),
                         lambda k: ~F.coalesce(lo.valid(k), F.lit(False)))))
 
-        from .regex_dialect import to_java_regex
-        pattern_res = []
-        for pat, _ in (s.pattern_properties or []):
-            jpat = to_java_regex(pat)
-            if jpat is None:
-                raise CompileFallback(f"patternProperties regex {pat!r}")
-            pattern_res.append(jpat)
-        def entries_viols(entries_fn, low):
-            """Recurse into each entry's value with a per-key pointer —
-            sub-violations keep their own keywords, matching the
-            interpreter's granularity."""
-            def viol_fn(v: Column, p: Column) -> Column:
-                return F.when(v.isNull() | ~is_obj(v),
-                              F.array().cast(VIOLATION_SCHEMA)) \
-                        .otherwise(F.flatten(F.transform(
-                            entries_fn(v),
-                            lambda kv: low.violations(
-                                kv.getField("value"),
-                                F.concat(p, F.lit("/"),
-                                         _ptr_key(kv.getField("key")))))))
-            return viol_fn
+        pattern_res = _java_patterns(s)
+
+        def not_obj(v: Column) -> Column:
+            return v.isNull() | ~is_obj(v)
 
         if s.pattern_properties:
             for (pat, sub), jpat in zip(s.pattern_properties, pattern_res):
                 low = self._lower(sub, base_uri, chain)
 
                 def matched_fn(v: Column, p=jpat) -> Column:
-                    return F.filter(
-                        F.map_entries(_vmap(v)),
-                        lambda kv: F.regexp_like(kv.getField("key"), F.lit(p)))
+                    return _matched_entries(_vmap(v), p)
 
                 add(gated(lambda v, lo=low, m=matched_fn: F.forall(
                         m(v), lambda kv: F.coalesce(
                             lo.valid(kv.getField("value")), F.lit(False)))),
-                    entries_viols(matched_fn, low))
+                    _entries_viols(matched_fn, low, not_obj))
 
         if s.additional_properties is not None:
             declared = [n for n, _ in (s.properties or [])]
 
             def extra_entries(v: Column) -> Column:
-                def is_extra(kv: Column) -> Column:
-                    cond = ~kv.getField("key").isin(*declared) if declared \
-                        else F.lit(True)
-                    for p in pattern_res:
-                        cond = cond & ~F.regexp_like(kv.getField("key"), F.lit(p))
-                    return cond
-                return F.filter(F.map_entries(_vmap(v)), is_extra)
+                return _extra_entries(_vmap(v), declared, pattern_res)
 
             if isinstance(s.additional_properties, bool):
                 if not s.additional_properties:
-                    # one 'false' violation per extra key (matches the
-                    # reference/interpreter, which validate each extra value
-                    # against the `false` schema)
-                    def ap_viols(v: Column, p: Column) -> Column:
-                        return F.when(
-                            v.isNull() | ~is_obj(v)
-                            | (F.size(extra_entries(v)) == 0),
-                            F.array().cast(VIOLATION_SCHEMA)) \
-                            .otherwise(F.transform(
-                                extra_entries(v),
-                                lambda kv: F.struct(
-                                    F.lit("false").alias("keyword"),
-                                    F.concat(p, F.lit("/"),
-                                             _ptr_key(kv.getField("key")))
-                                     .alias("json_pointer"),
-                                    F.lit("Boolean schema 'false' rejects "
-                                          "all values").alias("message"))))
                     add(lambda v: _guard(v, F.when(
                             is_obj(v), F.size(extra_entries(v)) == 0)
                             .otherwise(F.lit(True))),
-                        ap_viols)
+                        lambda v, p: F.when(
+                            not_obj(v) | (F.size(extra_entries(v)) == 0),
+                            F.array().cast(VIOLATION_SCHEMA))
+                        .otherwise(_false_viols(extra_entries(v), p)))
             else:
                 low = self._lower(s.additional_properties, base_uri, chain)
                 add(gated(lambda v, lo=low: F.forall(
                         extra_entries(v),
                         lambda kv: F.coalesce(lo.valid(kv.getField("value")),
                                               F.lit(False)))),
-                    entries_viols(extra_entries, low))
+                    _entries_viols(extra_entries, low, not_obj))
 
         if s.dependencies:
             for key, dep in s.dependencies:
                 if dep.required_props is not None:
                     reqs = dep.required_props
-                    dref = None
-                    if self.message_style == "reference" and reqs:
-                        def dref(v: Column, k=key, r=tuple(reqs)) -> Column:
-                            from .lean_messages import ref_prefix
-                            first_missing = F.coalesce(
-                                *[F.when(~F.map_contains_key(_vmap(v), x),
-                                         F.lit(x)) for x in r],
-                                F.lit(r[0]))
-                            pre = ref_prefix("dependencies", key=k, req="\x00")
-                            head, tail = pre.split("\x00")
-                            return F.concat(
-                                F.lit(head), first_missing, F.lit(tail),
-                                F.coalesce(_lean_compress_variant(v),
-                                           F.lit("null")))
+                    dref = self._dependencies_ref(
+                        key, reqs, chain,
+                        lambda v, x: ~F.map_contains_key(_vmap(v), x))
                     add_simple(gated(lambda v, k=key, r=reqs: F.when(
                         F.map_contains_key(_vmap(v), k),
                         reduce(lambda a, b: a & b,
@@ -919,12 +758,7 @@ class VariantCompiler:
     def _lower_array(self, s: SchemaObject, base_uri: str,
                      chain: tuple[str, ...],
                      add, add_simple) -> None:
-        has_arr_kw = any([
-            s.items is not None, s.additional_items is not None,
-            s.max_items is not None, s.min_items is not None,
-            s.unique_items, s.contains is not None,
-        ])
-        if not has_arr_kw:
+        if not _has_array_keywords(s):
             return
         def is_arr(v: Column) -> Column:
             return _ts(v).startswith("ARRAY")
@@ -959,7 +793,7 @@ class VariantCompiler:
                         .otherwise(F.size(F.array_distinct(canons))
                                    == F.size(canons)))
 
-                ref = self._refb("uniqueItems")
+                ref = self._refb("uniqueItems", chain)
 
                 def viol_fn(v: Column, p: Column) -> Column:
                     dup = (F.array(_viol_col("uniqueItems", p, ref(v)))
@@ -985,18 +819,18 @@ class VariantCompiler:
 
                 add_simple(gated(uniq), "uniqueItems",
                            "array items are not unique",
-                           ref=self._refb("uniqueItems"))
+                           ref=self._refb("uniqueItems", chain))
 
         def _nitems(v: Column) -> Column:
             return F.size(_varr(v))
         if s.max_items is not None:
             m = s.max_items
             add_simple(gated(lambda a, m=m: F.size(a) <= m), "maxItems", f"> {m}",
-                       ref=self._refb("maxItems", count_fn=_nitems, limit=m))
+                       ref=self._refb("maxItems", chain, count_fn=_nitems, limit=m))
         if s.min_items is not None:
             m = s.min_items
             add_simple(gated(lambda a, m=m: F.size(a) >= m), "minItems", f"< {m}",
-                       ref=self._refb("minItems", count_fn=_nitems, limit=m))
+                       ref=self._refb("minItems", chain, count_fn=_nitems, limit=m))
 
         if s.items is not None and not s.items.is_tuple:
             low = self._lower(s.items.single, base_uri, chain)
@@ -1040,14 +874,7 @@ class VariantCompiler:
             low = self._lower(s.contains, base_uri, chain)
             lo_n = s.min_contains if s.min_contains is not None else 1
             hi_n = s.max_contains
-            cref = None
-            if self.message_style == "reference":
-                ref_empty = self._refb("contains", prefix_key="contains_empty")
-                ref_nomatch = self._refb("contains")
-
-                def cref(v: Column) -> Column:
-                    return F.when(F.size(_varr(v)) == 0, ref_empty(v)) \
-                            .otherwise(ref_nomatch(v))
+            cref = self._contains_ref(chain, lambda v: F.size(_varr(v)))
             if lo_n == 1 and hi_n is None:
                 add_simple(gated(lambda a, lo=low: (F.size(a) > 0) & F.exists(
                     a, lambda e: F.coalesce(lo.valid(e), F.lit(False)))),
@@ -1068,106 +895,6 @@ class VariantCompiler:
                 add_simple(gated(pred), "contains",
                            f"match count outside [{lo_n}, {hi_n}]",
                            ref=cref)
-
-    # ---- combinators ---------------------------------------------------------
-
-    def _lower_combinators(self, s: SchemaObject, base_uri: str,
-                           chain: tuple[str, ...],
-                           add) -> None:
-        if s.all_of is not None:
-            for sub in s.all_of:
-                low = self._lower(sub, base_uri, chain)
-                add(low.valid, low.violations)
-        def branch_errs(v: Column, p: Column, lows) -> Column:
-            """Lean-array-of-arrays of per-branch violation messages (the
-            `Errors:` slot — twin of ColumnarCompiler.branch_errs)."""
-            parts = [F.concat(
-                F.lit("#["),
-                F.array_join(F.transform(lo.violations(v, p),
-                                         lambda x: x.getField("message")),
-                             ", "),
-                F.lit("]")) for lo in lows]
-            return F.concat(F.lit("#["),
-                            F.concat_ws(", ", *parts) if parts else F.lit(""),
-                            F.lit("]"))
-
-        refmode = self.message_style == "reference"
-        if s.any_of is not None:
-            lows = [self._lower(sub, base_uri, chain) for sub in s.any_of]
-
-            def v_fn(v: Column, ls=lows) -> Column:
-                if not ls:
-                    return F.lit(False)
-                return reduce(lambda a, b: a | b,
-                              (F.coalesce(lo.valid(v), F.lit(False)) for lo in ls))
-
-            def any_viol(v: Column, p: Column, vf=v_fn, ls=lows) -> Column:
-                if refmode:
-                    msg = F.concat(
-                        F.lit("anyOf: no schemas matched. Errors: "),
-                        branch_errs(v, p, ls), F.lit(" "),
-                        F.coalesce(_lean_compress_variant(v), F.lit("null")))
-                    bad = F.array(_viol_col("anyOf", p, msg))
-                else:
-                    bad = F.array(_viol("anyOf", p, "no branch matched"))
-                return F.when(vf(v), F.array().cast(VIOLATION_SCHEMA)) \
-                        .otherwise(bad)
-            add(v_fn, any_viol)
-        if s.one_of is not None:
-            lows = [self._lower(sub, base_uri, chain) for sub in s.one_of]
-
-            def v1_fn(v: Column, ls=lows) -> Column:
-                if not ls:
-                    return F.lit(False)
-                return reduce(lambda a, b: a + b,
-                              (F.coalesce(lo.valid(v), F.lit(False)).cast("int")
-                               for lo in ls)) == 1
-
-            def one_viol(v: Column, p: Column, vf=v1_fn, ls=lows) -> Column:
-                if refmode:
-                    n = reduce(lambda a, b: a + b,
-                               (F.coalesce(lo.valid(v), F.lit(False))
-                                 .cast("int") for lo in ls)) \
-                        if ls else F.lit(0)
-                    compressed = F.coalesce(_lean_compress_variant(v),
-                                            F.lit("null"))
-                    msg = F.when(
-                        n == 0,
-                        F.concat(F.lit("oneOf: expected exactly 1 match but "
-                                       "got 0. Errors: "),
-                                 branch_errs(v, p, ls), F.lit(" "),
-                                 compressed)) \
-                        .otherwise(F.concat(
-                            F.lit("oneOf: expected exactly 1 match but got "),
-                            n.cast("string"), F.lit(" "), compressed))
-                    bad = F.array(_viol_col("oneOf", p, msg))
-                else:
-                    bad = F.array(_viol("oneOf", p, "matched != 1 branches"))
-                return F.when(vf(v), F.array().cast(VIOLATION_SCHEMA)) \
-                        .otherwise(bad)
-            add(v1_fn, one_viol)
-        if s.not_ is not None:
-            low = self._lower(s.not_, base_uri, chain)
-
-            def vn_fn(v: Column, lo=low) -> Column:
-                return ~F.coalesce(lo.valid(v), F.lit(False))
-            nref = self._refb("not")
-            add(vn_fn, lambda v, p, vf=vn_fn, r=nref: F.when(
-                vf(v), F.array().cast(VIOLATION_SCHEMA))
-                .otherwise(F.array(
-                    _viol_col("not", p, r(v)) if r is not None
-                    else _viol("not", p, "schema matched but must not"))))
-        if s.if_ is not None:
-            if_low = self._lower(s.if_, base_uri, chain)
-            then_low = self._lower(s.then_, base_uri, chain) \
-                if s.then_ is not None else _LOWERED_TRUE
-            else_low = self._lower(s.else_, base_uri, chain) \
-                if s.else_ is not None else _LOWERED_TRUE
-            add(lambda v: F.when(F.coalesce(if_low.valid(v), F.lit(False)),
-                                 then_low.valid(v)).otherwise(else_low.valid(v)),
-                lambda v, p: F.when(F.coalesce(if_low.valid(v), F.lit(False)),
-                                    then_low.violations(v, p))
-                .otherwise(else_low.violations(v, p)))
 
 
 # ---------------------------------------------------------------------------

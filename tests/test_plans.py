@@ -169,3 +169,57 @@ def test_warm_validation_codegen_is_plan_neutral(spark):
     after = {r["doc_id"]: r["valid"] for r in validate_spans_best(
         df, SPAN_SCHEMA, keep_cols=["doc_id"]).collect()}
     assert before == after
+
+
+def test_fused_required_enum_null_span_rejected(spark):
+    """A required enum field makes the fused plan drop the field's separate
+    required clause: the enum clause runs over the RAW field array, where a
+    missing (null) value survives array_except and fails the row. A span
+    whose only defect is that missing field, or a null span, must still be
+    rejected, with the interpreter's verdict."""
+    from json_schema_lean_spark.interpreter import CompiledValidator
+
+    schema = {"type": "object", "properties": {
+        "doc_id": {"type": "string"},
+        "spans": {"type": "array", "items": {
+            "type": "object", "required": ["kind"],
+            "properties": {"kind": {"enum": ["text", "image"]}}}}}}
+    ddl = ("doc_id string, spans array<struct<kind:string,text:string,"
+           "media_ref:string,offset:int>>")
+    rows = [
+        ("ok", [("text", "a", None, 0), ("image", None, None, 1)]),
+        ("missing_kind", [("text", "a", None, 0), (None, "b", None, 1)]),
+        ("only_missing", [(None, "b", None, 0)]),
+        ("null_span", [("text", "a", None, 0), None]),
+        ("bad_kind", [("video", "a", None, 0)]),
+        ("empty", []),
+    ]
+    df = spark.createDataFrame(rows, ddl)
+    got = {r["doc_id"]: r["valid"] for r in validate_documents_fused(
+        df, schema, keep_cols=["doc_id"], with_violations=False).collect()}
+    ref = CompiledValidator(schema)
+    for doc_id, spans in rows:
+        doc = {"doc_id": doc_id, "spans": [
+            None if s is None else
+            {k: v for k, v in zip(("kind", "text", "media_ref", "offset"), s)
+             if v is not None}
+            for s in spans]}
+        assert got[doc_id] == ref.is_valid(doc), (doc_id, got[doc_id])
+    assert [d for d, ok in got.items() if not ok] == [
+        "missing_kind", "only_missing", "null_span", "bad_kind"]
+
+
+def test_fused_prefix_literal_is_ascii_below_del():
+    """The fused pattern clause is a string-range check, exact only while
+    succ(prefix) stays a single byte and the prefix has no regex
+    metacharacter: every character _PREFIX_LITERAL admits must be ASCII
+    below 0x7F and not '.', so widening the regex fails here."""
+    from json_schema_lean_spark.plans.fused import _PREFIX_LITERAL
+
+    admitted = [cp for cp in range(0x110000)
+                if _PREFIX_LITERAL.match("^" + chr(cp))]
+    assert admitted and max(admitted) < 0x7F, max(admitted)
+    assert ord(".") not in admitted
+    assert _PREFIX_LITERAL.match("^asset://")
+    for pattern in ("^foo.bar", "^é", "^ÿ", "^\U0001F4A9", "^doc\x7f"):
+        assert not _PREFIX_LITERAL.match(pattern), pattern
